@@ -177,6 +177,7 @@ def _progress_event(p) -> dict:
         "state_memory_bytes": p.state_memory_bytes,
         "state_rows_dropped_by_watermark": p.state_rows_dropped_by_watermark,
         "state_by_operator": [list(t) for t in (p.state_by_operator or [])],
+        "phase_ms": dict(p.phase_ms or {}),
     }
 
 

@@ -12,6 +12,14 @@ surface onto Structured Streaming's source contract:
   reader's offset is the count of segment files consumed per topic, so
   restart-from-checkpoint replays exactly the unseen segments: the
   reference's store-and-forward replay IS the offset contract here.
+- read planning: one planner (:func:`_plan`) serves batch and stream
+  reads. Consecutive segments of one topic share a read partition (one
+  Python-worker task) until the next segment would push it past 128 MB,
+  the default of Spark's file-source ``spark.sql.files.maxPartitionBytes``
+  — so a micro-batch costs one read task per topic, as Spark's Kafka
+  source plans one task per topic-partition offset range. Each segment
+  keeps its own index inside the partition, so ``wire=kafka`` offsets and
+  timestamps do not depend on how segments were packed.
 - publish: ``df.write.format("nyuki_bus")`` appends new segments (one per
   partition, commit-numbered) — at-least-once per partition, deduped
   downstream by :mod:`nyuki_spark.streaming.dedup` like any bus consumer.
@@ -71,6 +79,10 @@ KAFKA_SCHEMA = (
 # compacted Kafka topic, so consumers must not assume offset arithmetic.
 _OFFSET_STRIDE = 1 << 20
 
+# Byte cap of one read partition: the default of Spark's
+# spark.sql.files.maxPartitionBytes, fixed here rather than an option.
+_MAX_PARTITION_BYTES = 128 << 20
+
 
 def _read_segment_kafka(root: str, rel: str, seg_idx: int):
     import datetime
@@ -110,15 +122,6 @@ def _topic_segments(root: str) -> dict[str, list[str]]:
     return out
 
 
-def _segments(root: str) -> list[str]:
-    """All segment files as topic-relative paths (batch-read order)."""
-    return [
-        os.path.join(topic, f)
-        for topic, files in _topic_segments(root).items()
-        for f in files
-    ]
-
-
 def _segment_name() -> str:
     """Monotonic segment filename: files published after a directory
     listing always sort after everything in that listing."""
@@ -134,10 +137,45 @@ def _read_segment(root: str, rel: str):
                 yield (topic, line)
 
 
-class _SegmentPartition(InputPartition):
-    def __init__(self, rel: str, seg_idx: int = 0):
-        self.rel = rel
-        self.seg_idx = seg_idx
+def _sized(root: str, topic: str, files: list[str], start: int = 0):
+    """(rel, seg_idx, size) for the segments ``files[start:]`` of ``topic``
+    — the planner's input."""
+    for idx, fname in enumerate(files[start:], start=start):
+        rel = os.path.join(topic, fname)
+        yield rel, idx, os.path.getsize(os.path.join(root, rel))
+
+
+def _plan(segments) -> list[list[tuple[str, int]]]:
+    """Pack ``(rel, seg_idx, size)`` triples, given in publish order, into
+    read partitions of ``(rel, seg_idx)`` pairs. Consecutive segments of
+    one topic share a partition until the next segment would push it past
+    ``_MAX_PARTITION_BYTES``; a segment larger than that gets a partition
+    of its own. No partition is empty."""
+    plan: list[list[tuple[str, int]]] = []
+    topic, used = None, 0
+    for rel, seg_idx, size in segments:
+        seg_topic = rel.split(os.sep, 1)[0]
+        if not plan or seg_topic != topic or used + size > _MAX_PARTITION_BYTES:
+            plan.append([])
+            topic, used = seg_topic, 0
+        plan[-1].append((rel, seg_idx))
+        used += size
+    return plan
+
+
+class _SegmentsPartition(InputPartition):
+    """One read task: ``segments`` is a list of (rel, seg_idx), read in order."""
+
+    def __init__(self, segments: list[tuple[str, int]]):
+        self.segments = segments
+
+
+def _read_partition(root: str, partition: _SegmentsPartition, kafka_wire: bool):
+    for rel, seg_idx in partition.segments:
+        if kafka_wire:
+            yield from _read_segment_kafka(root, rel, seg_idx)
+        else:
+            yield from _read_segment(root, rel)
 
 
 class _BusBatchReader(DataSourceReader):
@@ -147,21 +185,18 @@ class _BusBatchReader(DataSourceReader):
         self.kafka_wire = options.get("wire") == "kafka"
 
     def partitions(self):
-        out = []
-        for topic, files in _topic_segments(self.root).items():
-            if self.topic and topic != self.topic:
-                continue
-            for idx, fname in enumerate(files):
-                out.append(_SegmentPartition(os.path.join(topic, fname), idx))
-        return out or [_SegmentPartition("")]
+        plan = _plan(
+            seg
+            for topic, files in _topic_segments(self.root).items()
+            if not self.topic or topic == self.topic
+            for seg in _sized(self.root, topic, files)
+        )
+        # Spark hands a batch read that plans no partition one partition of
+        # None; an empty bus plans one partition with no segments instead.
+        return [_SegmentsPartition(p) for p in plan] or [_SegmentsPartition([])]
 
     def read(self, partition):
-        if not partition.rel:
-            return
-        if self.kafka_wire:
-            yield from _read_segment_kafka(self.root, partition.rel, partition.seg_idx)
-        else:
-            yield from _read_segment(self.root, partition.rel)
+        yield from _read_partition(self.root, partition, self.kafka_wire)
 
 
 class _BusStreamReader(DataSourceStreamReader):
@@ -190,19 +225,18 @@ class _BusStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         segs = self._counts()
-        out = []
         start_t = start.get("topics", {})
-        for topic, n_end in end.get("topics", {}).items():
-            n_start = start_t.get(topic, 0)
-            for idx, fname in enumerate(segs.get(topic, [])[n_start:n_end], start=n_start):
-                out.append(_SegmentPartition(os.path.join(topic, fname), idx))
-        return out
+        plan = _plan(
+            seg
+            for topic, n_end in end.get("topics", {}).items()
+            for seg in _sized(
+                self.root, topic, segs.get(topic, [])[:n_end], start_t.get(topic, 0)
+            )
+        )
+        return [_SegmentsPartition(p) for p in plan]
 
     def read(self, partition):
-        if self.kafka_wire:
-            yield from _read_segment_kafka(self.root, partition.rel, partition.seg_idx)
-        else:
-            yield from _read_segment(self.root, partition.rel)
+        yield from _read_partition(self.root, partition, self.kafka_wire)
 
     def commit(self, end: dict) -> None:
         # Checkpoint WAL owns progress; the transport needs no ack. The
@@ -223,10 +257,12 @@ class _BusSocketStreamReader(DataSourceStreamReader):
     :mod:`nyuki_spark.sources.broker`) instead of segment files: offsets
     are per-topic message counts served by the broker's ``offsets`` verb,
     and each micro-batch fetches exactly [start, end) per topic over a
-    worker-side socket. One partition per (topic, batch-range) — a real
-    broker's partition count would fan this out; the transport swap is
-    the point, not the parallelism. Restart-from-checkpoint replays the
-    unconsumed suffix only, exercised over the wire in tests/test_bus.py.
+    worker-side socket. Both readers plan one partition per topic range
+    of a batch (the segment reader splits a range only past 128 MB), as
+    Spark's Kafka source plans one task per topic-partition range; a real
+    broker's partition count would fan this out. Restart-from-checkpoint
+    replays the unconsumed suffix only, exercised over the wire in
+    tests/test_bus.py.
     """
 
     def __init__(self, options):

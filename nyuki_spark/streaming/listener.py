@@ -37,6 +37,10 @@ class _Progress:
     # attributed: which operator's store dominates decides the tuning
     # lever (join watermark delay vs rollup window size).
     state_by_operator: list = None  # type: ignore[assignment]
+    # The batch's full durationMs map: triggerExecution plus its phases
+    # (latestOffset, getBatch, queryPlanning, addBatch, walCommit,
+    # commitOffsets) — where a micro-batch's fixed cost goes.
+    phase_ms: dict = None  # type: ignore[assignment]
 
 
 class MetricsListener(StreamingQueryListener):
@@ -58,13 +62,14 @@ class MetricsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = event.progress
         ops = p.stateOperators or []
+        phase_ms = dict(p.durationMs or {})
         self.progress.append(
             _Progress(
                 query_id=str(p.id),
                 name=p.name,
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
-                batch_duration_ms=(p.durationMs or {}).get("triggerExecution", 0),
+                batch_duration_ms=phase_ms.get("triggerExecution", 0),
                 state_rows=sum(o.numRowsTotal for o in ops),
                 state_memory_bytes=sum(o.memoryUsedBytes for o in ops),
                 state_rows_dropped_by_watermark=sum(
@@ -78,6 +83,7 @@ class MetricsListener(StreamingQueryListener):
                     )
                     for i, o in enumerate(ops)
                 ],
+                phase_ms=phase_ms,
             )
         )
 

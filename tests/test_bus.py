@@ -8,9 +8,18 @@ exactly the segments published while it was down.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from nyuki_spark.sources.bus import publish_rows, register_bus
+from nyuki_spark.sources.bus import (
+    _MAX_PARTITION_BYTES,
+    _OFFSET_STRIDE,
+    _plan,
+    publish_rows,
+    register_bus,
+)
 
 
 def _drain(spark, root, checkpoint, topic=None):
@@ -103,6 +112,11 @@ def test_kafka_wire_batch_schema_and_offsets(spark, tmp_path):
     order_offsets = sorted(r.offset for r in rows if r.topic == "orders")
     assert order_offsets == sorted(set(order_offsets))  # strictly monotonic
     assert order_offsets[-1] > order_offsets[0]  # later segment sorts later
+    # Both orders segments are read by one packed partition; each keeps
+    # its own index, so offset = seg_idx * stride + line.
+    assert df.rdd.getNumPartitions() == 2  # one per topic
+    assert order_offsets == [0, 1, _OFFSET_STRIDE]
+    assert [r.offset for r in rows if r.topic == "alerts"] == [0]
     # the adapter restores the bus row shape pipelines are written against
     bus = kafka_wire_to_bus(df)
     assert bus.columns == ["topic", "payload"]
@@ -111,6 +125,84 @@ def test_kafka_wire_batch_schema_and_offsets(spark, tmp_path):
         '{"id": 2}',
         '{"id": 3}',
     ]
+
+
+def _seg(topic: str, i: int, size: int) -> tuple[str, int, int]:
+    return (os.path.join(topic, f"{i:020d}.jsonl"), i, size)
+
+
+def test_plan_packs_consecutive_segments_per_topic():
+    """30 small segments of one topic plus one of another plan as two
+    read partitions, each in publish order."""
+    segs = [_seg("orders", i, 100) for i in range(30)] + [_seg("alerts", 0, 50)]
+    plan = _plan(segs)
+    assert plan == [
+        [(rel, idx) for rel, idx, _ in segs[:30]],
+        [(segs[30][0], 0)],
+    ]
+    assert _plan([]) == []
+
+
+def test_plan_splits_at_segment_boundary_past_cap():
+    """A partition closes before the segment that would push it past the
+    cap; the split never cuts a segment."""
+    mb = 1 << 20
+    segs = [_seg("events", i, 50 * mb) for i in range(5)]
+    plan = _plan(segs)
+    assert [[idx for _, idx in p] for p in plan] == [[0, 1], [2, 3], [4]]
+    # Exactly at the cap still fits.
+    exact = [_seg("events", 0, _MAX_PARTITION_BYTES - mb), _seg("events", 1, mb)]
+    assert len(_plan(exact)) == 1
+
+
+def test_plan_oversized_segment_gets_own_partition():
+    big = _MAX_PARTITION_BYTES + 1
+    segs = [_seg("events", 0, 10), _seg("events", 1, big), _seg("events", 2, 10)]
+    plan = _plan(segs)
+    assert [[idx for _, idx in p] for p in plan] == [[0], [1], [2]]
+
+
+def test_batch_read_packs_segments_into_one_partition(spark, tmp_path):
+    register_bus(spark)
+    root = str(tmp_path / "bus")
+    for i in range(30):
+        publish_rows(root, "orders", [{"id": i}])
+    df = spark.read.format("nyuki_bus").option("path", root).load()
+    assert df.rdd.getNumPartitions() == 1
+    # Rows come back in publish order from the one task.
+    assert [r.payload for r in df.collect()] == [f'{{"id": {i}}}' for i in range(30)]
+    # An empty bus still reads as one (empty) partition.
+    empty = spark.read.format("nyuki_bus").option("path", str(tmp_path / "none")).load()
+    assert empty.rdd.getNumPartitions() == 1 and empty.count() == 0
+
+
+def test_stream_progress_carries_phase_durations(spark, tmp_path):
+    """The listener keeps each batch's full durationMs map, so a bus
+    drain's progress shows its addBatch and walCommit phases."""
+    import time
+
+    from nyuki_spark.plans.api import _progress_event
+    from nyuki_spark.streaming.listener import MetricsListener
+
+    register_bus(spark)
+    root = str(tmp_path / "bus")
+    publish_rows(root, "orders", [{"id": 1}, {"id": 2}])
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        assert len(_drain(spark, root, str(tmp_path / "cp"))) == 2
+        # Listener events arrive asynchronously after the query ends.
+        deadline = time.monotonic() + 30
+        while not any(p.num_input_rows for p in listener.progress):
+            assert time.monotonic() < deadline, "no progress event with rows"
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    data = [p for p in listener.progress if p.num_input_rows]
+    for p in data:
+        assert {"addBatch", "walCommit", "triggerExecution"} <= set(p.phase_ms)
+        # ...and the HTTP /progress event shape carries the same map.
+        assert _progress_event(p)["phase_ms"] == p.phase_ms
 
 
 def test_kafka_wire_stream_and_sink_adapter(spark, tmp_path):
@@ -199,9 +291,7 @@ def test_mid_replay_kill_then_restart_exactly_once(spark, tmp_path):
     # uncommitted.
     publish_rows(root, "orders", [{"id": 3}])
     publish_rows(root, "alerts", [{"id": 4}])
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="injected mid-replay crash"):
+    with pytest.raises(Exception, match="injected mid-replay crash"):
         run()
     assert committed_batches(out) == [0], "crashed batch must not commit"
 
