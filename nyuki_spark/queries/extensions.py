@@ -10,6 +10,7 @@ applies. Approximate/nondeterministic ops carry no oracle (rows-only).
 
 from __future__ import annotations
 
+import datetime
 import shutil
 import uuid
 import tempfile
@@ -19,39 +20,56 @@ from pyspark.sql import functions as F
 
 from nyuki_spark.catalog import load_table
 from nyuki_spark.queries.registry import register
-from nyuki_spark.streaming.replay import replay_stream
-from nyuki_spark.streaming.runner import run_append_foreach_batch, run_to_table
+from nyuki_spark.streaming.runner import (
+    await_drain,
+    run_append_foreach_batch,
+    run_foreach_batch,
+    run_live,
+    run_to_table,
+)
 from nyuki_spark.streaming.windows import session_agg, sliding_agg, tumbling_agg
 
 
-def _replayed(spark: SparkSession, sf_dir: str):
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    return replay_stream(spark, events, n_chunks=4, scratch_dir=scratch), scratch
+def _flush(
+    spark: SparkSession,
+    events: DataFrame,
+    days: tuple[int, ...],
+    types: tuple[str, ...] = ("__flush__",),
+) -> list[DataFrame]:
+    """Far-future flush sentinels for a watermarked replay of ``events``
+    (the sentinel rule: streaming/runner.py), one frame per offset in
+    ``days`` and so one extra micro-batch each (replay_stream's
+    ``flush_df``). Each frame has one row per type at max(ts) + offset,
+    user -1, event ids -1, -2, ...."""
+    mx = events.agg(F.max("ts")).head()[0]
+
+    def frame(d: int) -> DataFrame:
+        ts = mx + datetime.timedelta(days=d)
+        rows = [(-1 - i, ts, -1, t, 0.0, "{}") for i, t in enumerate(types)]
+        return spark.createDataFrame(rows, events.schema)
+
+    return [frame(d) for d in days]
+
+
+def _watermarked(sdf: DataFrame) -> DataFrame:
+    # Fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP. The
+    # session runs UTC (configure_session), so the cast is value-identical.
+    # The 35-day delay covers the hash-random replay disorder.
+    return sdf.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
+        "ts", "35 days"
+    )
 
 
 def _live(build):
-    """Wrap a streaming pipeline builder into a (spark, sf_dir) callable."""
+    """Wrap a streaming pipeline builder into a (spark, sf_dir) callable:
+    complete-mode memory sink over the 4-chunk events replay."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sdf, scratch = _replayed(spark, sf_dir)
-        name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-        try:
-            out = run_to_table(build(sdf), mode="complete", name=name)
-            # Force materialisation before the scratch dir disappears.
-            out = out.cache()
-            out.count()
-            return out
-        finally:
-            # Drop the memory-sink view in ALL exits: the cached DataFrame
-            # stays valid (its plan holds the sink relation), but the
-            # catalog no longer pins the sink rows — a mid-materialisation
-            # failure must not leak a pinned sink per bench rep.
-            try:
-                spark.catalog.dropTempView(name)
-            except Exception:
-                pass
-            shutil.rmtree(scratch, ignore_errors=True)
+        return run_live(
+            spark,
+            load_table(spark, sf_dir, "events"),
+            lambda sdf, _scratch: run_to_table(build(sdf), mode="complete"),
+        )
 
     return fn
 
@@ -75,35 +93,18 @@ def _live_append(build, order_cols):
     hash-random replay disorder exactly like the stream-stream join; the
     emitted result then equals the batch answer and the complete-mode
     oracles apply unchanged. Sink is foreachBatch -> parquet (files, the
-    path whose throughput matters), read back and checkpointed before the
-    scratch dir disappears.
+    path whose throughput matters), read back and pinned by run_live.
     """
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import datetime
+        from pyspark.sql.types import TimestampType
 
         events = load_table(spark, sf_dir, "events")
-        scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-        try:
-            mx = events.agg(F.max("ts")).head()[0]
-            flush = spark.createDataFrame(
-                [(-1, mx + datetime.timedelta(days=80), -1, "__flush__", 0.0, "{}")],
-                events.schema,
-            )
-            sdf = replay_stream(
-                spark, events, n_chunks=4, scratch_dir=scratch, flush_df=flush
-            )
-            # Fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP.
-            # Session runs UTC (configure_session) so both casts below are
-            # value-identical — same pattern as stream_join_live.
-            sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-                "ts", "35 days"
-            )
-            out = run_append_foreach_batch(
-                build(sdf), f"{scratch}/out", f"{scratch}/ckpt"
-            )
-            from pyspark.sql.types import TimestampType
 
+        def query(sdf: DataFrame, scratch: str) -> DataFrame:
+            out = run_append_foreach_batch(
+                build(_watermarked(sdf)), f"{scratch}/out", f"{scratch}/ckpt"
+            )
             for fld in out.schema.fields:
                 if isinstance(fld.dataType, TimestampType):
                     out = out.withColumn(
@@ -113,9 +114,9 @@ def _live_append(build, order_cols):
                 out = out.where(F.col("event_type") != "__flush__")
             if "user_id" in out.columns:
                 out = out.where(F.col("user_id") != -1)
-            return out.orderBy(*order_cols).localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
+            return out.orderBy(*order_cols)
+
+        return run_live(spark, events, query, flush_df=_flush(spark, events, (80,)))
 
     return fn
 
@@ -355,44 +356,39 @@ register(
 # eviction never firing, keeping the batch oracle exact.
 
 
+def _attribution_join(sdf: DataFrame, how: str = "inner", ids: bool = True):
+    """View -> purchase within one hour as a stream-stream interval join
+    of the watermarked replay with itself (the shared core of the three
+    join ids). ``ids`` carries each side's event_id along."""
+    wm = _watermarked(sdf)
+
+    def side(event_type: str, user: str, ts: str, event_id: str) -> DataFrame:
+        cols = [F.col("user_id").alias(user), F.col("ts").alias(ts)]
+        if ids:
+            cols.append(F.col("event_id").alias(event_id))
+        return wm.filter(F.col("event_type") == event_type).select(*cols)
+
+    views = side("view", "v_user", "view_ts", "view_id")
+    buys = side("purchase", "b_user", "buy_ts", "buy_id")
+    return views.join(
+        buys,
+        (F.col("v_user") == F.col("b_user"))
+        & (F.col("buy_ts") >= F.col("view_ts"))
+        & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+
+
 def _stream_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        sdf = replay_stream(spark, events, n_chunks=4, scratch_dir=scratch)
-        # The fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP.
-        # The session runs UTC (configure_session), so the cast is
-        # value-identical.
-        wm = sdf.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-            "ts", "35 days"
+    def query(sdf: DataFrame, _scratch: str) -> DataFrame:
+        joined = _attribution_join(sdf).select(
+            F.col("v_user").alias("user_id"), "view_id", "buy_id"
         )
-        views = wm.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_id"),
+        return run_to_table(joined, mode="append").orderBy(
+            "user_id", "view_id", "buy_id"
         )
-        buys = wm.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("buy_ts"),
-            F.col("event_id").alias("buy_id"),
-        )
-        joined = views.join(
-            buys,
-            (F.col("v_user") == F.col("b_user"))
-            & (F.col("buy_ts") >= F.col("view_ts"))
-            & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-        ).select(F.col("v_user").alias("user_id"), "view_id", "buy_id")
-        out = run_to_table(joined, mode="append", name=name)
-        out = out.orderBy("user_id", "view_id", "buy_id").cache()
-        out.count()
-        return out
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return run_live(spark, load_table(spark, sf_dir, "events"), query)
 
 
 register(
@@ -430,17 +426,11 @@ register(
 
 
 def _stream_cdc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import Window
 
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-cdc-")
-    try:
-        sdf = replay_stream(spark, events, n_chunks=4, scratch_dir=scratch)
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("ts"), F.desc("event_id")
-        )
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+
+    def query(sdf: DataFrame, scratch: str) -> DataFrame:
         state = {"path": None}
 
         def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -459,22 +449,12 @@ def _stream_cdc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("rn") == 1)
                 .drop("rn")
             )
-            out = os.path.join(scratch, f"state_{batch_id}")
+            out = f"{scratch}/state_{batch_id}"
             merged.write.mode("overwrite").parquet(out)
             state["path"] = out
 
-        q = (
-            sdf.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # Partial state would be silently wrong; fail loudly before
-            # the finally-block deletes files under the live query.
-            q.stop()
-            raise TimeoutError("stream_cdc_live drain exceeded 300s")
-        final = (
+        run_foreach_batch(sdf, upsert, f"{scratch}/ckpt")
+        return (
             spark.read.parquet(state["path"])
             .select(
                 "user_id",
@@ -483,12 +463,9 @@ def _stream_cdc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("value").alias("last_value"),
             )
             .orderBy("user_id")
-            .cache()
         )
-        final.count()
-        return final
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return run_live(spark, load_table(spark, sf_dir, "events"), query)
 
 
 register(
@@ -2188,15 +2165,12 @@ def _stream_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py: simhash_chunks; pigeonhole-exact at
     Hamming <= 3). Document bodies never enter the state.
     """
-    import os
-
     from nyuki_spark.functions.text import simhash60
     from nyuki_spark.operators.dedup import simhash_chunks
 
     docs = load_table(spark, sf_dir, "documents")
-    scratch = tempfile.mkdtemp(prefix="nyuki-neardup-")
-    try:
-        sdf = replay_stream(spark, docs, n_chunks=3, scratch_dir=scratch)
+
+    def query(sdf: DataFrame, scratch: str) -> DataFrame:
         state = {"path": None}
 
         def fold(batch: DataFrame, batch_id: int) -> None:
@@ -2213,19 +2187,11 @@ def _stream_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             if state["path"] is not None:
                 new = spark.read.parquet(state["path"]).unionByName(new)
             merged = new.groupBy("fp", "sh").agg(F.min("mid").alias("mid"))
-            out = os.path.join(scratch, f"state_{batch_id}")
+            out = f"{scratch}/state_{batch_id}"
             merged.write.mode("overwrite").parquet(out)
             state["path"] = out
 
-        q = (
-            sdf.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream_neardup_live drain exceeded 300s")
+        run_foreach_batch(sdf, fold, f"{scratch}/ckpt")
         index = spark.read.parquet(state["path"])
         # Narrow (id, fp, sh) rows, read by both verdict tiers — persist
         # so the corpus is sketched once in the verdict pass, not twice.
@@ -2260,7 +2226,7 @@ def _stream_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .withColumn("is_near", F.lit(True))
         )
-        out = (
+        return (
             docs.select("doc_id")
             .join(exact, "doc_id", "left")
             .join(near, "doc_id", "left")
@@ -2273,14 +2239,8 @@ def _stream_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("doc_id")
         )
-        # localCheckpoint, not cache: the lineage reads parquet state under
-        # ``scratch``, which the finally block deletes. A cache survives
-        # only until eviction — any recompute would hit FileNotFound (r4
-        # ADVICE); the eager checkpoint truncates lineage to executor
-        # blocks with no file dependency.
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return run_live(spark, docs, query, n_chunks=3)
 
 
 def _duck_neardup_oracle() -> str:
@@ -2862,42 +2822,13 @@ register(
 
 
 def _stream_join_agg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-
     events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-        fts = mx + datetime.timedelta(days=80)
-        flush = spark.createDataFrame(
-            [
-                (-1, fts, -1, "view", 0.0, "{}"),
-                (-2, fts, -1, "purchase", 0.0, "{}"),
-            ],
-            events.schema,
-        )
-        sdf = replay_stream(
-            spark, events, n_chunks=4, scratch_dir=scratch, flush_df=flush
-        )
-        wm = sdf.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-            "ts", "35 days"
-        )
-        views = wm.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        buys = wm.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("buy_ts"),
-        )
-        joined = views.join(
-            buys,
-            (F.col("v_user") == F.col("b_user"))
-            & (F.col("buy_ts") >= F.col("view_ts"))
-            & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
+    mx = events.agg(F.max("ts")).head()[0]
+
+    def query(sdf: DataFrame, scratch: str) -> DataFrame:
         agg = (
-            joined.groupBy(F.window("buy_ts", "1 hour"))
+            _attribution_join(sdf, ids=False)
+            .groupBy(F.window("buy_ts", "1 hour"))
             .agg(F.count(F.lit(1)).alias("n_attributions"))
             .select(
                 F.col("window.start").alias("win_start"),
@@ -2905,12 +2836,18 @@ def _stream_join_agg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = run_append_foreach_batch(agg, f"{scratch}/out", f"{scratch}/ckpt")
-        out = out.where(
-            F.col("win_start") <= F.lit(mx).cast("timestamp")
-        ).withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
-        return out.orderBy("win_start").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return (
+            out.where(F.col("win_start") <= F.lit(mx).cast("timestamp"))
+            .withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
+            .orderBy("win_start")
+        )
+
+    return run_live(
+        spark,
+        events,
+        query,
+        flush_df=_flush(spark, events, (80,), ("view", "purchase")),
+    )
 
 
 register(
@@ -3176,58 +3113,24 @@ def _stream_join_outer_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     '__flush__' convention of the windowed replays. Oracle is the batch
     LEFT JOIN with the identical interval predicate.
     """
-    import datetime
-
     events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-        fts = mx + datetime.timedelta(days=80)
-        flush = spark.createDataFrame(
-            [
-                (-1, fts, -1, "view", 0.0, "{}"),
-                (-2, fts, -1, "purchase", 0.0, "{}"),
-            ],
-            events.schema,
+
+    def query(sdf: DataFrame, _scratch: str) -> DataFrame:
+        joined = _attribution_join(sdf, "leftOuter").select(
+            F.col("v_user").alias("user_id"), "view_id", "buy_id"
         )
-        sdf = replay_stream(
-            spark, events, n_chunks=4, scratch_dir=scratch, flush_df=flush
-        )
-        wm = sdf.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-            "ts", "35 days"
-        )
-        views = wm.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_id"),
-        )
-        buys = wm.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("buy_ts"),
-            F.col("event_id").alias("buy_id"),
-        )
-        joined = views.join(
-            buys,
-            (F.col("v_user") == F.col("b_user"))
-            & (F.col("buy_ts") >= F.col("view_ts"))
-            & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftOuter",
-        ).select(F.col("v_user").alias("user_id"), "view_id", "buy_id")
-        out = run_to_table(joined, mode="append", name=name)
-        out = (
-            out.where(F.col("view_id") >= 0)
+        return (
+            run_to_table(joined, mode="append")
+            .where(F.col("view_id") >= 0)
             .orderBy("user_id", "view_id", "buy_id")
-            .cache()
         )
-        out.count()
-        return out
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return run_live(
+        spark,
+        events,
+        query,
+        flush_df=_flush(spark, events, (80,), ("view", "purchase")),
+    )
 
 
 register(
@@ -3349,32 +3252,26 @@ def _router_live_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metrics sum DECIMAL(18,2) casts (exact, order-free) and only the
     final total casts to double.
     """
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-router-")
-    try:
-        from nyuki_spark.streaming.router import TriggerRouter
+    from nyuki_spark.streaming.router import TriggerRouter
 
-        sdf = replay_stream(spark, events, n_chunks=4, scratch_dir=scratch)
-        dec = lambda c: c.cast("decimal(18,2)")  # noqa: E731
-        router = TriggerRouter()
-        router.add_trigger(
-            "purchase",
-            lambda df: df.select(
-                "event_id", (dec(F.col("value")) * 100).alias("metric")
-            ),
-        )
-        router.add_trigger(
-            "click",
-            lambda df: df.select(
-                "event_id", dec(F.col("value")).alias("metric")
-            ),
-        )
-        router.add_trigger(
-            "error",
-            lambda df: df.select(
-                "event_id", dec(F.lit(1)).alias("metric")
-            ),
-        )
+    dec = lambda c: c.cast("decimal(18,2)")  # noqa: E731
+    router = TriggerRouter()
+    router.add_trigger(
+        "purchase",
+        lambda df: df.select(
+            "event_id", (dec(F.col("value")) * 100).alias("metric")
+        ),
+    )
+    router.add_trigger(
+        "click",
+        lambda df: df.select("event_id", dec(F.col("value")).alias("metric")),
+    )
+    router.add_trigger(
+        "error",
+        lambda df: df.select("event_id", dec(F.lit(1)).alias("metric")),
+    )
+
+    def query(sdf: DataFrame, scratch: str) -> DataFrame:
         sink_root = f"{scratch}/sinks"
 
         def sink_for(topic: str):
@@ -3383,34 +3280,27 @@ def _router_live_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             return _s
 
-        queries = router.start_all(
-            sdf,
-            "event_type",
-            sink_for,
-            f"{scratch}/ckpt",
-            available_now=True,
+        await_drain(
+            router.start_all(
+                sdf, "event_type", sink_for, f"{scratch}/ckpt", available_now=True
+            )
         )
-        for q in queries:
-            q.awaitTermination()
         routed = None
         for t in sorted(router.triggers):
             part = spark.read.parquet(f"{sink_root}/{t}").withColumn(
                 "route", F.lit(t)
             )
             routed = part if routed is None else routed.unionByName(part)
-        res = (
+        return (
             routed.groupBy("route")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("metric").cast("double").alias("metric_total"),
             )
             .orderBy("route")
-            .cache()
         )
-        res.count()
-        return res
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return run_live(spark, load_table(spark, sf_dir, "events"), query)
 
 
 register(
@@ -3673,104 +3563,86 @@ register(
 # -- live CEP sequence detection (round 9) ---------------------------------------
 
 
-def _cep_funnel_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CEP funnel (streaming/stateful.py:funnel_match) over the
-    4-chunk out-of-order replay: per user, the earliest view anchors a
-    7-DAY pattern window; the match is the first click strictly after
-    the anchor and the first purchase strictly after that, both inside
-    the window — emitted exactly once per user when the anchor's horizon
-    closes (event-time TIMER at anchor + window, fired by the
-    watermark; continuous-stream-correct, not an inactivity timeout).
-    The batch oracle runs the identical window-bounded min-chain in SQL
-    — streaming CEP vs batch SQL parity, like the stream-stream joins.
-
-    Two flush sentinels, not one: timers are evaluated against the
-    watermark computed at the END of the previous batch, so sentinel-1
-    advances the watermark past every real timer and sentinel-2's batch
-    is where all groups fire. The 35-day delay bounds replay disorder:
-    every timer — earliest at min-event + 7 d (anchor + window, or
-    last-event + 7 d for anchor-less keys) — stays ABOVE the
-    pre-sentinel watermark because the fixture span is shorter than
-    delay + window (~30 d < 42 d): no group can close before its data
-    is complete.
-    """
-    import datetime
-
+def _cep_drain(sdf: DataFrame, cols, delay: str, **match) -> DataFrame:
+    """The query of every live CEP id: funnel_match (streaming/stateful.py)
+    over the watermarked stream ``sdf``, drained into an append memory
+    sink. ``match`` goes to funnel_match (``steps`` is required);
+    ``cols`` names its step1_ts, step2_ts, ... outputs. Sentinel rows are
+    dropped from the drained result only, and the output is ordered by
+    user, then the first step (TTL ids emit one row per epoch)."""
     from nyuki_spark.streaming.stateful import funnel_match
 
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
+    value = ["value"] if match.get("value_col") else []
+    sdf = sdf.select(
+        F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", *value
+    ).withWatermark("ts", delay)
+    res = run_to_table(funnel_match(sdf, **match), mode="append")
+    return (
+        res.where(F.col("user_id") >= 0)
+        .select(
+            "user_id",
+            *(F.col(f"step{i}_ts").alias(c) for i, c in enumerate(cols, 1)),
+        )
+        .orderBy("user_id", cols[0])
+    )
 
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
 
-        sdf = replay_stream(
+def _cep_live(cols, **match):
+    """Live CEP id over the 4-chunk out-of-order replay of the events
+    table, checked against a batch SQL twin — streaming CEP vs batch SQL
+    parity (the query: :func:`_cep_drain`). Per user the anchor step's
+    earliest event opens the pattern window, and the match is emitted
+    exactly once per user when the anchor's horizon closes (event-time
+    TIMER at anchor + window, fired by the watermark;
+    continuous-stream-correct, not an inactivity timeout).
+
+    A 35-day watermark delay and two flush sentinels (+80 d, +81 d), not
+    one: timers are evaluated against the watermark computed at the END
+    of the previous batch, so sentinel-1 advances the watermark past
+    every real timer and sentinel-2's batch is where all groups fire. The
+    35-day delay bounds replay disorder: every timer — earliest at
+    min-event + 7 d (anchor + window, or last-event + 7 d for anchor-less
+    keys) — stays ABOVE the pre-sentinel watermark because the fixture
+    span is shorter than delay + window (~30 d < 42 d): no group can
+    close before its data is complete. Types outside the pattern (its
+    steps and ``absent``) can never match — they are dropped BEFORE
+    buffering (40% of rows off the state store). The sentinel type stays
+    in that IN-list on purpose: the watermark is computed from
+    post-filter rows, and dropping the flush would pin it below every
+    timer (the sentinel rule, streaming/runner.py).
+    """
+    steps = match["steps"]
+    types = [t for s in steps for t in (s if isinstance(s, tuple) else (s,))]
+    if match.get("absent"):
+        types.append(match["absent"])
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        events = load_table(spark, sf_dir, "events")
+        return run_live(
             spark,
             events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
+            lambda sdf, _scratch: _cep_drain(
+                sdf.where(F.col("event_type").isin(*types, "__flush__")),
+                cols,
+                "35 days",
+                **match,
+            ),
+            flush_df=_flush(spark, events, (80, 81)),
         )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            # Types outside the pattern can never match the chain — drop
-            # them BEFORE buffering (40% of rows off the state store).
-            # The sentinel type stays in the IN-list on purpose: the
-            # watermark is computed from post-filter rows, and dropping
-            # the flush would pin it below every timer (the _live_append
-            # sentinel lesson).
-            .where(
-                F.col("event_type").isin(
-                    "view", "click", "purchase", "__flush__"
-                )
-            )
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(sdf)
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view_ts"),
-                F.col("step2_ts").alias("click_ts"),
-                F.col("step3_ts").alias("purchase_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
 
+    return fn
+
+
+# Per user, the earliest view anchors a 7-DAY pattern window; the match is
+# the first click strictly after the anchor and the first purchase strictly
+# after that, both inside the window. The batch oracle runs the identical
+# window-bounded min-chain in SQL, like the stream-stream joins.
 
 register(
     "stream_cep_funnel_live",
-    engine_fn=_cep_funnel_fn,
+    engine_fn=_cep_live(
+        ("view_ts", "click_ts", "purchase_ts"), steps=("view", "click", "purchase")
+    ),
     oracle=(
         "WITH v AS (SELECT user_id, MIN(ts) AS v FROM events\n"
         "  WHERE event_type = 'view' GROUP BY 1),\n"
@@ -3804,99 +3676,23 @@ register(
 # -- live CEP with negation: abandoned cart (round 10) ---------------------------
 
 
-def _cep_abandoned_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CEP absence-within-window (streaming/stateful.py:funnel_match
-    with ``absent``) over the 4-chunk out-of-order replay: per user, the
-    earliest view anchors a 7-DAY window; the match is the first click
-    strictly after the anchor AND NO purchase anywhere inside the window
-    strictly after the anchor — the abandoned-cart shape, the canonical
-    MATCH_RECOGNIZE negation workload. Emitted exactly once per user at
-    anchor-horizon close (the negation can only be decided when the
-    window is FINAL — an inactivity timer would fire early and emit
-    false abandons whose purchase simply had not arrived). The batch
-    oracle is the identical window-bounded min-chain plus a NOT EXISTS
-    over the negated type — streaming CEP vs batch SQL parity.
-
-    Same two-flush-sentinel replay contract as stream_cep_funnel_live
-    (timers are evaluated against the previous batch's watermark;
-    fixture span ~30 d < delay + window = 42 d, so no group closes
-    before its data is complete).
-    """
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            # The negated type MUST survive this filter: dropping
-            # purchases pre-buffer would turn every completed funnel
-            # into a false abandon.
-            .where(
-                F.col("event_type").isin(
-                    "view", "click", "purchase", "__flush__"
-                )
-            )
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf, steps=("view", "click"), absent="purchase"
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view_ts"),
-                F.col("step2_ts").alias("click_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# Absence-within-window (funnel_match with ``absent``): per user, the
+# earliest view anchors a 7-DAY window; the match is the first click
+# strictly after the anchor AND NO purchase anywhere inside the window
+# strictly after the anchor — the abandoned-cart shape, the canonical
+# MATCH_RECOGNIZE negation workload. The negation can only be decided when
+# the window is FINAL — an inactivity timer would fire early and emit false
+# abandons whose purchase simply had not arrived. The negated type MUST
+# survive the in-stream type filter (_cep_live keeps ``absent`` in it):
+# dropping purchases pre-buffer would turn every completed funnel into a
+# false abandon. The batch oracle is the identical window-bounded min-chain
+# plus a NOT EXISTS over the negated type.
 
 register(
     "stream_cep_abandoned_live",
-    engine_fn=_cep_abandoned_fn,
+    engine_fn=_cep_live(
+        ("view_ts", "click_ts"), steps=("view", "click"), absent="purchase"
+    ),
     oracle=(
         "WITH v AS (SELECT user_id, MIN(ts) AS v FROM events\n"
         "  WHERE event_type = 'view' GROUP BY 1),\n"
@@ -4056,87 +3852,17 @@ register(
 # -- live CEP, 4-step chain (round 10) --------------------------------------------
 
 
-def _cep_kstep_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live 4-step CEP (signup -> view -> click -> purchase min-chain
-    inside the 7-day anchor window) over the out-of-order replay —
-    exercises funnel_match's k-step generalization end-to-end on a
-    REAL chain longer than the fixed arity-3 the operator had before
-    round 10. Same event-time-timer mechanics and two-flush-sentinel
-    replay contract as stream_cep_funnel_live."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            .where(
-                F.col("event_type").isin(
-                    "signup", "view", "click", "purchase", "__flush__"
-                )
-            )
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf, steps=("signup", "view", "click", "purchase")
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("signup_ts"),
-                F.col("step2_ts").alias("view_ts"),
-                F.col("step3_ts").alias("click_ts"),
-                F.col("step4_ts").alias("purchase_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# 4-step chain (signup -> view -> click -> purchase min-chain inside the
+# 7-day anchor window): funnel_match's k-step generalization end-to-end on
+# a REAL chain longer than the fixed arity-3 the operator had before
+# round 10.
 
 register(
     "stream_cep_kstep_live",
-    engine_fn=_cep_kstep_fn,
+    engine_fn=_cep_live(
+        ("signup_ts", "view_ts", "click_ts", "purchase_ts"),
+        steps=("signup", "view", "click", "purchase"),
+    ),
     oracle=(
         "WITH s AS (SELECT user_id, MIN(ts) AS s FROM events\n"
         "  WHERE event_type = 'signup' GROUP BY 1),\n"
@@ -4268,86 +3994,20 @@ register(
 # -- live CEP with per-step quantifiers (round 11) ---------------------------------
 
 
-def _cep_quantified_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live quantified CEP — the Flink-CEP/MATCH_RECOGNIZE ``A{m,}``
-    class (r10 verdict Next #3): ``view{3,} -> click{2,}`` per user
-    inside the 7-day anchor window. The anchor is the user's earliest
-    view; the view step is SATISFIED at the 3rd view in the window, the
-    click step at the 2nd click strictly after that — funnel_match's
-    greedy-earliest order-statistic semantics, which the batch twin
-    re-derives as window-bounded ROW_NUMBER order statistics (rn = m).
-    Same out-of-order replay, event-time-timer and two-flush-sentinel
-    mechanics as the other CEP live ids; state stays window-bounded
-    (quantifiers change which buffered row satisfies a step, not what
-    is buffered)."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            .where(F.col("event_type").isin("view", "click", "__flush__"))
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf, steps=("view", "click"), min_counts=(3, 2)
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view3_ts"),
-                F.col("step2_ts").alias("click2_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# The Flink-CEP/MATCH_RECOGNIZE ``A{m,}`` class (r10 verdict Next #3):
+# ``view{3,} -> click{2,}`` per user inside the 7-day anchor window. The
+# anchor is the user's earliest view; the view step is SATISFIED at the 3rd
+# view in the window, the click step at the 2nd click strictly after that —
+# funnel_match's greedy-earliest order-statistic semantics, which the batch
+# twin re-derives as window-bounded ROW_NUMBER order statistics (rn = m).
+# State stays window-bounded (quantifiers change which buffered row
+# satisfies a step, not what is buffered).
 
 register(
     "stream_cep_quantified_live",
-    engine_fn=_cep_quantified_fn,
+    engine_fn=_cep_live(
+        ("view3_ts", "click2_ts"), steps=("view", "click"), min_counts=(3, 2)
+    ),
     oracle=(
         "WITH a AS (SELECT user_id, MIN(ts) AS anchor FROM events\n"
         "  WHERE event_type = 'view' GROUP BY 1),\n"
@@ -4385,87 +4045,18 @@ register(
 # -- live CEP with alternation (round 11) -------------------------------------------
 
 
-def _cep_alternation_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CEP with ALTERNATION — the `A -> (B|C) -> D` MATCH_RECOGNIZE
-    class (listed inexpressible in the r10 verdict): signup ->
-    (view|click) -> purchase inside the 7-day anchor window. A step
-    given to funnel_match as a tuple of types matches the EARLIEST
-    event of any of them, so the batch twin is the same min-chain SQL
-    with `event_type IN (...)` on the alternated step. Same replay /
-    timer / sentinel mechanics as the other CEP live ids."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            .where(
-                F.col("event_type").isin(
-                    "signup", "view", "click", "purchase", "__flush__"
-                )
-            )
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf, steps=("signup", ("view", "click"), "purchase")
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("signup_ts"),
-                F.col("step2_ts").alias("engage_ts"),
-                F.col("step3_ts").alias("purchase_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# ALTERNATION — the `A -> (B|C) -> D` MATCH_RECOGNIZE class (listed
+# inexpressible in the r10 verdict): signup -> (view|click) -> purchase
+# inside the 7-day anchor window. A step given to funnel_match as a tuple
+# of types matches the EARLIEST event of any of them, so the batch twin is
+# the same min-chain SQL with `event_type IN (...)` on the alternated step.
 
 register(
     "stream_cep_alternation_live",
-    engine_fn=_cep_alternation_fn,
+    engine_fn=_cep_live(
+        ("signup_ts", "engage_ts", "purchase_ts"),
+        steps=("signup", ("view", "click"), "purchase"),
+    ),
     oracle=(
         "WITH a AS (SELECT user_id, MIN(ts) AS s FROM events\n"
         "  WHERE event_type = 'signup' GROUP BY 1),\n"
@@ -4598,91 +4189,26 @@ register(
 # -- live CEP with bounded quantifiers A{m,n} (round 12) ----------------------------
 
 
-def _cep_bounded_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live BOUNDED-quantifier CEP — the full ``A{m,n}`` MATCH_RECOGNIZE
-    class (r11 verdict Next #2): ``view{2,4} -> click{1,3}`` per user
-    inside the 7-day anchor window, VETO semantics (streaming/
-    stateful.py:funnel_match max_counts): a step's occurrence count over
-    its eligibility interval — [anchor, hi] for the anchor step,
-    (prev_satisfaction, hi] after — must satisfy m <= count <= n or the
-    whole match fails. A pure window count is order-insensitive, so
-    out-of-order arrival cannot flip a veto. The batch twin re-derives
-    both the order-statistic satisfaction times (ROW_NUMBER rn = m) and
-    the interval counts (COUNT(*) OVER the same partition) in SQL. Same
-    out-of-order replay / event-time-timer / two-flush-sentinel
-    mechanics as the other CEP live ids; state stays window-bounded
-    (bounds change whether a match EMITS, not what is buffered)."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-            )
-            .where(F.col("event_type").isin("view", "click", "__flush__"))
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf,
-            steps=("view", "click"),
-            min_counts=(2, 1),
-            max_counts=(4, 3),
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view2_ts"),
-                F.col("step2_ts").alias("click_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# BOUNDED-quantifier CEP — the full ``A{m,n}`` MATCH_RECOGNIZE class (r11
+# verdict Next #2): ``view{2,4} -> click{1,3}`` per user inside the 7-day
+# anchor window, VETO semantics (funnel_match max_counts): a step's
+# occurrence count over its eligibility interval — [anchor, hi] for the
+# anchor step, (prev_satisfaction, hi] after — must satisfy
+# m <= count <= n or the whole match fails. A pure window count is
+# order-insensitive, so out-of-order arrival cannot flip a veto. The batch
+# twin re-derives both the order-statistic satisfaction times (ROW_NUMBER
+# rn = m) and the interval counts (COUNT(*) OVER the same partition) in
+# SQL. State stays window-bounded (bounds change whether a match EMITS, not
+# what is buffered).
 
 register(
     "stream_cep_bounded_live",
-    engine_fn=_cep_bounded_fn,
+    engine_fn=_cep_live(
+        ("view2_ts", "click_ts"),
+        steps=("view", "click"),
+        min_counts=(2, 1),
+        max_counts=(4, 3),
+    ),
     oracle=(
         "WITH a AS (SELECT user_id, MIN(ts) AS anchor FROM events\n"
         "  WHERE event_type = 'view' GROUP BY 1),\n"
@@ -4723,90 +4249,44 @@ register(
 
 
 def _cep_ttl_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CEP with a TOMBSTONE TTL (r11 verdict Next #5): view ->
-    click inside a 2-DAY anchor window, ``tombstone_ttl_us`` = 6 days —
-    the bounded-state mode for recurring keys. Per user the earliest
-    view anchors epoch 1; when the horizon (anchor + 2d) closes the
-    outcome is emitted once and the key tombstones; the tombstone
-    expires at horizon + 6d and the NEXT view strictly after that
-    deadline anchors epoch 2 — so one user emits up to 4 rows over the
-    30-day fixture, one per epoch, exactly the
-    exactly-once-per-key-within-TTL contract funnel_match documents.
+    """Live CEP with a TOMBSTONE TTL (r11 verdict Next #5): view -> click
+    inside a 2-DAY anchor window, ``tombstone_ttl_us`` = 6 days — the
+    bounded-state mode for recurring keys. Per user the earliest view
+    anchors epoch 1; when the horizon (anchor + 2d) closes the outcome is
+    emitted once and the key tombstones; the tombstone expires at
+    horizon + 6d and the NEXT view strictly after that deadline anchors
+    epoch 2 — so one user emits up to 4 rows over the 30-day fixture, one
+    per epoch, exactly the exactly-once-per-key-within-TTL contract
+    funnel_match documents.
 
     Epoch boundaries are event-time-exact (stateful.py r12: next-epoch
-    events buffer INSIDE the standing tombstone while the watermark
-    lags the deadline), so the batch twin can unroll the epochs
-    (anchor_e+1 = first view after anchor_e + window + TTL, 4 epochs
-    covers the 30-day span) and match exactly. Mid-stream timers are
-    what make TTL observable at all, so this id uses the
-    EVENT-TIME-ORDERED replay (replay_stream order_col, 16 chunks,
-    1-day watermark delay): horizons and deadlines pass while the
-    stream is still running — TTL(6d) > delay(1d) + chunk span(~2d)
-    keeps every epoch hand-off on the tombstone path (the deployment
-    rule the operator docstring states)."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
+    events buffer INSIDE the standing tombstone while the watermark lags
+    the deadline), so the batch twin can unroll the epochs (anchor_e+1 =
+    first view after anchor_e + window + TTL, 4 epochs covers the 30-day
+    span) and match exactly. Mid-stream timers are what make TTL
+    observable at all, so this id uses the EVENT-TIME-ORDERED replay
+    (replay_stream ``order_col``, 16 chunks, 1-day watermark delay,
+    sentinels at +5 d and +6 d): horizons and deadlines pass while the
+    stream is still running — TTL(6d) > delay(1d) + chunk span(~2d) keeps
+    every epoch hand-off on the tombstone path (the deployment rule the
+    operator docstring states). The type filter runs before the replay,
+    so nothing filters the stream."""
     events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events.where(F.col("event_type").isin("view", "click")),
-            n_chunks=16,
-            scratch_dir=scratch,
-            flush_df=[sentinel(5), sentinel(6)],
-            order_col="ts",
-        )
-        sdf = sdf.select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "user_id",
-            "event_type",
-        ).withWatermark("ts", "1 day")
-        out = funnel_match(
+    return run_live(
+        spark,
+        events.where(F.col("event_type").isin("view", "click")),
+        lambda sdf, _scratch: _cep_drain(
             sdf,
+            ("view_ts", "click_ts"),
+            "1 day",
             steps=("view", "click"),
             within_us=2 * 86_400_000_000,
             tombstone_ttl_us=6 * 86_400_000_000,
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view_ts"),
-                F.col("step2_ts").alias("click_ts"),
-            )
-            .orderBy("user_id", "view_ts")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
+        ),
+        n_chunks=16,
+        flush_df=_flush(spark, events, (5, 6)),
+        order_col="ts",
+    )
 
 
 def _ttl_epoch_ctes(n_epochs: int = 4) -> str:
@@ -4863,99 +4343,28 @@ register(
 # -- live CEP with cross-step value predicates (round 12) ---------------------------
 
 
-def _cep_valuechain_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CEP with CROSS-STEP VALUE PREDICATES — the class the r11
-    docstring declared out of scope ("genuinely need a backtracking
-    matcher"), delivered in r12: ``view -> click -> purchase`` with
-    click.value > view.value AND purchase.value > click.value (strict
-    value escalation) inside the 7-day anchor window. The window stays
-    anchored at the earliest view (exactly-once finality untouched);
-    the reported chain is the LEXICOGRAPHICALLY EARLIEST (t1, t2, t3)
-    satisfying both predicates, found by funnel_match's window-bounded
-    DFS — when the earliest candidate for a step admits no valid
-    continuation the matcher backtracks to the next. The twin is the
-    exact relational rendering of that search: a 3-way self-join over
-    the window with the predicates, ranked by (t1, t2, t3), rn = 1 —
-    so every backtracking decision is hash-verified. Same replay /
-    timer / sentinel mechanics as the other CEP live ids; state stays
-    window-bounded (the buffer gains an 8-byte value per event)."""
-    import datetime
-
-    from nyuki_spark.streaming.stateful import funnel_match
-
-    events = load_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
-    name = f"nyuki_live_{uuid.uuid4().hex[:12]}"
-    try:
-        mx = events.agg(F.max("ts")).head()[0]
-
-        def sentinel(days: int) -> DataFrame:
-            return spark.createDataFrame(
-                [
-                    (
-                        -1,
-                        mx + datetime.timedelta(days=days),
-                        -1,
-                        "__flush__",
-                        0.0,
-                        "{}",
-                    )
-                ],
-                events.schema,
-            )
-
-        sdf = replay_stream(
-            spark,
-            events,
-            n_chunks=4,
-            scratch_dir=scratch,
-            flush_df=[sentinel(80), sentinel(81)],
-        )
-        sdf = (
-            sdf.select(
-                F.col("ts").cast("timestamp").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-            )
-            .where(
-                F.col("event_type").isin(
-                    "view", "click", "purchase", "__flush__"
-                )
-            )
-            .withWatermark("ts", "35 days")
-        )
-        out = funnel_match(
-            sdf,
-            steps=("view", "click", "purchase"),
-            value_col="value",
-            cross_predicates=((2, ">", 1), (3, ">", 2)),
-        )
-        res = run_to_table(out, mode="append", name=name)
-        res = (
-            res.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.col("step1_ts").alias("view_ts"),
-                F.col("step2_ts").alias("click_ts"),
-                F.col("step3_ts").alias("purchase_ts"),
-            )
-            .orderBy("user_id")
-            .cache()
-        )
-        res.count()
-        return res
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(scratch, ignore_errors=True)
-
+# CROSS-STEP VALUE PREDICATES — the class the r11 docstring declared out of
+# scope ("genuinely need a backtracking matcher"), delivered in r12:
+# ``view -> click -> purchase`` with click.value > view.value AND
+# purchase.value > click.value (strict value escalation) inside the 7-day
+# anchor window. The window stays anchored at the earliest view
+# (exactly-once finality untouched); the reported chain is the
+# LEXICOGRAPHICALLY EARLIEST (t1, t2, t3) satisfying both predicates, found
+# by funnel_match's window-bounded DFS — when the earliest candidate for a
+# step admits no valid continuation the matcher backtracks to the next. The
+# twin is the exact relational rendering of that search: a 3-way self-join
+# over the window with the predicates, ranked by (t1, t2, t3), rn = 1 — so
+# every backtracking decision is hash-verified. State stays window-bounded
+# (the buffer gains an 8-byte value per event).
 
 register(
     "stream_cep_valuechain_live",
-    engine_fn=_cep_valuechain_fn,
+    engine_fn=_cep_live(
+        ("view_ts", "click_ts", "purchase_ts"),
+        steps=("view", "click", "purchase"),
+        value_col="value",
+        cross_predicates=((2, ">", 1), (3, ">", 2)),
+    ),
     oracle=(
         "WITH a AS (SELECT user_id, MIN(ts) AS anchor FROM events\n"
         "  WHERE event_type = 'view' GROUP BY 1),\n"

@@ -2,18 +2,56 @@
 
 ``availableNow`` processes every pending micro-batch then stops — the
 Structured Streaming idiom for "drain the backlog". Used by tests, by the
-live declared queries, and by the trigger router's unit mode.
+live registry ids, and by the trigger router's unit mode.
+
+The live-query contract (:func:`run_live`, used by every ``*_live`` id):
+
+- *Scratch lifetime.* ``run_live`` makes one scratch dir, replays the
+  source into it, hands it to the query for checkpoints, sinks and fold
+  state, and deletes it on every exit, success or failure.
+- *Sentinels flow through the filters.* A finite replay in append mode
+  holds its tail in state until the watermark passes it, so the replay
+  ends with far-future flush rows (``flush_df``). They must reach the
+  EventTimeWatermark node: Catalyst pushes a deterministic filter below
+  it, down to the scan, so a filter that drops the sentinel pins the
+  watermark below every real window or timer. Keep the sentinel's type
+  in any in-stream filter and drop the sentinel rows only from the
+  drained result.
+- *Pin rule.* The result is pinned with ``localCheckpoint(eager=True)``
+  before the scratch dir goes: it truncates lineage to executor blocks
+  with no file dependency. A ``cache()`` is not enough — once evicted
+  (or ``clearCache()``), a recount re-reads files that no longer exist.
+- *Views.* :func:`run_to_table` drops its own memory-sink view before it
+  returns; the returned DataFrame still reads the sink. Callers neither
+  name sinks nor drop views.
+- *Bounded drains.* Every drain waits at most ``DRAIN_TIMEOUT_S``; on
+  timeout it stops every query it waited on and raises ``TimeoutError``.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import shutil
+import tempfile
+import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["run_to_table", "run_append_foreach_batch", "stream_parallelism"]
+from nyuki_spark.streaming.replay import replay_stream
+
+__all__ = [
+    "await_drain",
+    "run_append_foreach_batch",
+    "run_foreach_batch",
+    "run_live",
+    "run_to_table",
+    "stream_parallelism",
+]
+
+DRAIN_TIMEOUT_S = 300
 
 
 @contextlib.contextmanager
@@ -49,50 +87,90 @@ def stream_parallelism(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def await_drain(queries: list) -> None:
+    """Wait until every started availableNow query in ``queries`` has
+    terminated, all within one shared bound, ``DRAIN_TIMEOUT_S``. On
+    timeout, or if waiting raises, stop every one of them: reading a sink
+    now would return a silently-partial result, and the caller is about to
+    delete files under the live queries (r4 code review). A timeout raises
+    ``TimeoutError``."""
+    deadline = time.monotonic() + DRAIN_TIMEOUT_S
+    drained = False
+    try:
+        for q in queries:
+            # awaitTermination rejects a zero timeout; 1 ms is the floor.
+            if not q.awaitTermination(max(0.001, deadline - time.monotonic())):
+                raise TimeoutError(
+                    f"streaming drain exceeded {DRAIN_TIMEOUT_S}s for {q.name or q.id}"
+                )
+        drained = True
+    finally:
+        if not drained:
+            for q in queries:
+                q.stop()
+
+
 def run_to_table(
     sdf: DataFrame,
     mode: str = "complete",
     name: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Execute streaming DataFrame ``sdf`` with an availableNow trigger into
-    an in-memory sink; returns the sink table as a batch DataFrame.
+    an in-memory sink; returns the sink's rows as a batch DataFrame.
 
     ``complete`` mode keeps full aggregate state and rewrites the sink each
     batch — on a finite replay the final table equals the batch answer
     (stream/batch parity). ``append`` emits only watermark-closed results:
     the right mode to *observe* eviction semantics.
+
+    The sink's temp view ``name`` is dropped before this returns, on every
+    exit: the returned DataFrame's plan holds the sink itself, so it still
+    reads every row, while the catalog no longer pins them.
     """
     spark = SparkSession.getActiveSession()
     if name is None:
         name = f"nyuki_sink_{uuid.uuid4().hex[:12]}"
-    # The conf stays pinned through the drain: a streaming query captures
-    # shuffle-partition count when its FIRST batch is constructed, which
-    # happens asynchronously after start() — restoring only after
-    # termination removes the race.
-    with stream_parallelism(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            # Reading the sink now would return a silently-partial result;
-            # stop the query and fail loudly instead (r4 code review).
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain exceeded {timeout_sec}s for sink {name}"
+    try:
+        # The conf stays pinned through the drain: a streaming query
+        # captures shuffle-partition count when its FIRST batch is
+        # constructed, which happens asynchronously after start() —
+        # restoring only after termination removes the race.
+        with stream_parallelism(spark):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
             )
-    return spark.table(name)
+            await_drain([q])
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def run_foreach_batch(
+    sdf: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> None:
+    """Drain a streaming DataFrame in APPEND mode through
+    ``foreachBatch(fn)`` — the shape of a per-micro-batch fold into
+    caller-owned state."""
+    q = (
+        sdf.writeStream.foreachBatch(fn)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_drain([q])
 
 
 def run_append_foreach_batch(
     sdf: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Drain a streaming DataFrame in APPEND mode through a foreachBatch
     parquet sink and return the written rows as a batch DataFrame.
@@ -108,14 +186,40 @@ def run_append_foreach_batch(
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"append drain exceeded {timeout_sec}s -> {out_dir}")
+    run_foreach_batch(sdf, sink, checkpoint_dir)
     return spark.read.parquet(out_dir)
+
+
+def run_live(
+    spark: SparkSession,
+    source: DataFrame,
+    query: Callable[[DataFrame, str], DataFrame],
+    *,
+    n_chunks: int = 4,
+    flush_df: DataFrame | list[DataFrame] | None = None,
+    order_col: str | None = None,
+) -> DataFrame:
+    """Replay ``source`` as a stream, drain it through ``query`` and return
+    the pinned batch result (the live-query contract in the module
+    docstring).
+
+    ``query(sdf, scratch)`` gets the replayed stream and the scratch dir
+    (for checkpoints, sinks and fold state), drains through
+    :func:`run_to_table`, :func:`run_append_foreach_batch` or
+    :func:`run_foreach_batch`, and returns the final batch DataFrame.
+    ``n_chunks``, ``flush_df`` and ``order_col`` go to
+    :func:`~nyuki_spark.streaming.replay.replay_stream`.
+    """
+    scratch = tempfile.mkdtemp(prefix="nyuki-live-")
+    try:
+        sdf = replay_stream(
+            spark,
+            source,
+            n_chunks=n_chunks,
+            scratch_dir=scratch,
+            flush_df=flush_df,
+            order_col=order_col,
+        )
+        return query(sdf, scratch).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

@@ -16,19 +16,42 @@ default ``pytest tests/`` loop; full-result correctness lives in
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 
+from nyuki_spark.catalog import TABLES
 from nyuki_spark.queries import REGISTRY
 
 ALL_IDS = sorted(REGISTRY)
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _nyuki_dirs() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "nyuki-*")))
+
+
 @pytest.mark.parametrize("qid", ALL_IDS)
 def test_query_executes(qid, spark, sf_dir):
+    live = "_live" in qid
+    if live:
+        views, dirs = _temp_views(spark), _nyuki_dirs()
     df = REGISTRY[qid].run(spark, sf_dir)
     # .limit(1).collect() still submits the job: closures pickle, the plan
     # compiles, and one partition executes — exactly what the r3 bug needed.
     df.limit(1).collect()
+    if live:
+        # A live id cleans up after itself (streaming/runner.py contract):
+        # no running query, no leftover sink view (fixture tables are
+        # registered by Query.run itself), no scratch dir.
+        assert spark.streams.active == []
+        assert _temp_views(spark) - views - set(TABLES) == set()
+        assert _nyuki_dirs() - dirs == set()
 
 
 def test_register_rejects_uninferrable_pure_sql():

@@ -226,7 +226,11 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
         )
         .select(c_sdf.user_id, "click_ts", "buy_ts")
     )
-    out = run_to_table(joined, mode="append")
+    name = f"ssj_{uuid.uuid4().hex[:8]}"
+    out = run_to_table(joined, mode="append", name=name)
+    # run_to_table drops its own memory-sink view; the returned DataFrame
+    # still reads the sink.
+    assert name not in {t.name for t in spark.catalog.listTables()}
     rows = out.collect()
     assert [r.user_id for r in rows] == [1], rows
 
