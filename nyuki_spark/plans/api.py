@@ -27,9 +27,11 @@ empty mount). This module mirrors that surface on the engine's terms:
   pipeline's per-batch progress (rows, state rows/bytes, watermark
   evictions) two ways: ``GET /progress/stream`` is Server-Sent Events
   (``text/event-stream``; ``since``/``max``/``timeout_s`` query params),
-  ``GET /progress?since=N`` is the long-poll snapshot returning events
-  N.. plus the next cursor. Both read the listener's in-memory progress
-  list — metadata-sized (one entry per micro-batch), never rows.
+  ``GET /progress?since=N`` is the long-poll snapshot returning the
+  events after the N-th ever recorded, plus the next cursor. Both read
+  the listener's in-memory progress buffer — metadata-sized (one entry
+  per micro-batch, the last ``PROGRESS_CAP`` kept), never rows; a client
+  that fell behind the cap resumes at the oldest kept event.
 
 Scale note: templates are metadata (bytes); instances are Spark jobs. The
 HTTP layer never holds rows — an instance run materialises through the
@@ -234,9 +236,9 @@ def serve(
             deadline = time.monotonic() + timeout_s
             try:
                 while time.monotonic() < deadline:
-                    snapshot = listener.progress
-                    while idx < len(snapshot):
-                        payload = json.dumps(_progress_event(snapshot[idx]))
+                    idx, batch = listener.events_since(idx)
+                    for p in batch:
+                        payload = json.dumps(_progress_event(p))
                         idx += 1
                         self.wfile.write(
                             f"id: {idx}\ndata: {payload}\n\n".encode()
@@ -262,9 +264,8 @@ def serve(
                 # Validate query params BEFORE any body/header is written:
                 # a bare int()/float() raising inside the handler thread
                 # would abort the connection with no JSON error (r8
-                # advice); a negative `since` would Python-slice from the
-                # END and return a wrong `next` cursor — clamp to
-                # [0, len(progress)].
+                # advice). `since` is an absolute cursor (entries ever
+                # recorded); events_since clamps it to the kept range.
                 try:
                     since = max(0, int(qs.get("since", 0)))
                     max_events = max(0, int(qs.get("max", 0)))
@@ -284,16 +285,14 @@ def serve(
                         400,
                         {"error": "since/max must be int, timeout_s float"},
                     )
-                since = min(since, len(listener.progress))
                 if parts == ["progress", "stream"]:
                     qs["_since"] = since
                     qs["_max"] = max_events
                     qs["_timeout_s"] = timeout_s
                     return self._sse_stream(qs)
                 if parts == ["progress"]:
-                    events = [
-                        _progress_event(p) for p in listener.progress[since:]
-                    ]
+                    since, batch = listener.events_since(since)
+                    events = [_progress_event(p) for p in batch]
                     return self._send(
                         200, {"since": since, "next": since + len(events), "events": events}
                     )

@@ -10,12 +10,20 @@ everything else in the engine.
 
 from __future__ import annotations
 
+import threading
+from collections import deque
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
-__all__ = ["MetricsListener"]
+__all__ = ["MetricsListener", "PROGRESS_CAP"]
+
+# Progress entries a listener keeps: one per micro-batch of every query on
+# the session, so an unbounded list grows for as long as the session runs
+# (a 1 s trigger adds 86,400 a day). At a few hundred bytes an entry the
+# cap bounds the buffer to a few MB; older entries are dropped first.
+PROGRESS_CAP = 10_000
 
 
 @dataclass
@@ -47,14 +55,44 @@ class MetricsListener(StreamingQueryListener):
     """Collects per-batch progress for every streaming query on the session.
 
     Attach with ``spark.streams.addListener(listener)``; read
-    ``listener.progress`` (list) or ``listener.to_df(spark)`` (DataFrame —
-    report-as-a-table, joinable/aggregatable like any other source).
+    ``listener.progress`` (a list snapshot) or ``listener.to_df(spark)``
+    (DataFrame — report-as-a-table, joinable/aggregatable like any other
+    source).
+
+    Only the last :data:`PROGRESS_CAP` entries are kept. Each entry also
+    has an absolute sequence number (0 for the first ever recorded), which
+    :meth:`events_since` uses as a cursor that stays valid as old entries
+    are dropped.
     """
 
     def __init__(self) -> None:
-        self.progress: list[_Progress] = []
+        self._buf: deque[_Progress] = deque(maxlen=PROGRESS_CAP)
+        self._seen = 0  # entries ever recorded; the next one's sequence number
+        self._lock = threading.Lock()
         self.started: list[str] = []
         self.terminated: list[str] = []
+
+    @property
+    def progress(self) -> list[_Progress]:
+        """The kept entries, oldest first (a copy: safe to iterate while
+        the listener thread appends)."""
+        with self._lock:
+            return list(self._buf)
+
+    def clear(self) -> None:
+        """Drop the kept entries; sequence numbers keep counting."""
+        with self._lock:
+            self._buf.clear()
+
+    def events_since(self, since: int) -> tuple[int, list[_Progress]]:
+        """Entries after the ``since``-th ever recorded, as ``(start,
+        entries)`` where ``start`` is the first entry's sequence number.
+        ``since`` is clamped to the recorded count; a cursor older than
+        the oldest kept entry resumes there."""
+        with self._lock:
+            oldest = self._seen - len(self._buf)
+            start = min(max(since, oldest), self._seen)
+            return start, list(self._buf)[start - oldest:]
 
     def onQueryStarted(self, event) -> None:
         self.started.append(str(event.id))
@@ -63,29 +101,30 @@ class MetricsListener(StreamingQueryListener):
         p = event.progress
         ops = p.stateOperators or []
         phase_ms = dict(p.durationMs or {})
-        self.progress.append(
-            _Progress(
-                query_id=str(p.id),
-                name=p.name,
-                batch_id=p.batchId,
-                num_input_rows=p.numInputRows,
-                batch_duration_ms=phase_ms.get("triggerExecution", 0),
-                state_rows=sum(o.numRowsTotal for o in ops),
-                state_memory_bytes=sum(o.memoryUsedBytes for o in ops),
-                state_rows_dropped_by_watermark=sum(
-                    o.numRowsDroppedByWatermark for o in ops
-                ),
-                state_by_operator=[
-                    (
-                        getattr(o, "operatorName", None) or f"op{i}",
-                        o.numRowsTotal,
-                        o.memoryUsedBytes,
-                    )
-                    for i, o in enumerate(ops)
-                ],
-                phase_ms=phase_ms,
-            )
+        entry = _Progress(
+            query_id=str(p.id),
+            name=p.name,
+            batch_id=p.batchId,
+            num_input_rows=p.numInputRows,
+            batch_duration_ms=phase_ms.get("triggerExecution", 0),
+            state_rows=sum(o.numRowsTotal for o in ops),
+            state_memory_bytes=sum(o.memoryUsedBytes for o in ops),
+            state_rows_dropped_by_watermark=sum(
+                o.numRowsDroppedByWatermark for o in ops
+            ),
+            state_by_operator=[
+                (
+                    getattr(o, "operatorName", None) or f"op{i}",
+                    o.numRowsTotal,
+                    o.memoryUsedBytes,
+                )
+                for i, o in enumerate(ops)
+            ],
+            phase_ms=phase_ms,
         )
+        with self._lock:
+            self._buf.append(entry)
+            self._seen += 1
 
     def onQueryIdle(self, event) -> None:
         pass

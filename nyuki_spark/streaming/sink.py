@@ -18,6 +18,15 @@ All commit-census checks go through Spark's Hadoop FileSystem layer
 would silently restrict the idempotent-replay check to driver-local
 paths, breaking it on the hdfs://s3a:// stores the sink exists for.
 Local behavior is byte-identical (the Path resolves to the local FS).
+
+Write rule: one write task per task slot. Each batch is written through
+``coalesce(sparkContext.defaultParallelism)``, so a batch writes at most
+``defaultParallelism`` part files, whatever the partition count of the
+plan feeding it. ``coalesce`` is narrow: in a stateful query each state
+partition still loads and commits its own store, in sequence inside one
+slot's task, instead of one short task per state partition queueing for
+the slots. It never adds partitions, so a batch that already has fewer is
+written as it is.
 """
 
 from __future__ import annotations
@@ -42,7 +51,8 @@ def idempotent_parquet_sink(out_dir: str):
         target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
         if fs_exists(df.sparkSession, f"{target}/_SUCCESS"):
             return  # this id already committed: replay after a crash
-        df.write.mode("overwrite").parquet(target)
+        slots = df.sparkSession.sparkContext.defaultParallelism
+        df.coalesce(slots).write.mode("overwrite").parquet(target)
 
     return write
 

@@ -46,7 +46,7 @@ def main() -> int:
     def run_one(qid: str, store: str, null_col: str | None = None) -> None:
         from pyspark.sql import functions as F
 
-        listener.progress.clear()
+        listener.clear()
         t0 = time.perf_counter()
         out = REGISTRY[qid].run(spark, sf_dir)
         n_out = out.count()

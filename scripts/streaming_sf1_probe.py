@@ -84,7 +84,7 @@ def main() -> int:
     out_rows: dict[tuple[str, str], int] = {}
 
     def run_one(qid: str, store: str) -> None:
-        listener.progress.clear()
+        listener.clear()
         t0 = time.perf_counter()
         out = REGISTRY[qid].run(spark, sf_dir)
         n_out = out.count()

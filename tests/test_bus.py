@@ -304,6 +304,86 @@ def test_mid_replay_kill_then_restart_exactly_once(spark, tmp_path):
     assert committed_batches(out) == [0, 1]
 
 
+def test_stateful_crash_after_state_commit_then_restart(spark, tmp_path):
+    """Dedup-to-sink under a crash that lands AFTER the batch's state was
+    committed: the sink function runs the batch (``df.collect()`` executes
+    the stateful stage, which commits its state version) and then throws,
+    so the batch is in the offset log but not the commit log. The restart
+    re-runs it and re-commits a state version that already exists on disk
+    (through the checkpoint manager's rename) before the coalesced sink
+    write. Every unique event must reach the sink once, a duplicate in the
+    next batch must still be dropped by the restored state, and every
+    state partition must keep its delta files and both checksum files."""
+    import re
+
+    from nyuki_spark.streaming.dedup import dedup_within_watermark
+    from nyuki_spark.streaming.sink import idempotent_parquet_sink
+
+    register_bus(spark)
+    root = str(tmp_path / "bus")
+    cp = tmp_path / "cp"
+    out = str(tmp_path / "out")
+    marker = tmp_path / "crashed_once"
+    base = idempotent_parquet_sink(out)
+
+    def crash_after_state_commit(df, batch_id):
+        rows = df.collect()
+        if not marker.exists() and any(r.event_id == "c" for r in rows):
+            marker.touch()
+            raise RuntimeError("injected crash after state commit")
+        base(df, batch_id)
+
+    def run():
+        raw = spark.readStream.format("nyuki_bus").option("path", root).load()
+        events = (
+            raw.select(F.from_json("payload", "event_id string, ts_ms long").alias("e"))
+            .select("e.*")
+            .withColumn("ts", F.timestamp_millis("ts_ms"))
+        )
+        q = (
+            dedup_within_watermark(events, ["event_id"], "ts", "10 seconds")
+            .writeStream.foreachBatch(crash_after_state_commit)
+            .option("checkpointLocation", str(cp))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    t0 = 1_700_000_000_000
+
+    def ev(event_id, dt_ms):
+        return {"event_id": event_id, "ts_ms": t0 + dt_ms}
+
+    publish_rows(root, "ev", [ev("a", 0), ev("b", 1)])
+    run()
+    publish_rows(root, "ev", [ev("c", 2), ev("a", 3)])
+    with pytest.raises(Exception, match="injected crash after state commit"):
+        run()
+    # The crashed batch is offset-logged, not committed, yet its state
+    # version is already on disk.
+    crashed = max(int(f) for f in os.listdir(cp / "offsets") if f.isdigit())
+    assert not (cp / "commits" / str(crashed)).exists()
+    assert (cp / "state" / "0" / "0" / f"{crashed + 1}.delta").exists()
+    run()  # restart: the crashed batch re-runs on its committed state
+    publish_rows(root, "ev", [ev("b", 4), ev("d", 5)])  # b: dup within watermark
+    run()
+
+    got = sorted(r.event_id for r in spark.read.parquet(out).collect())
+    assert got == ["a", "b", "c", "d"], f"exactly-once violated: {got}"
+    commits = {int(f) for f in os.listdir(cp / "commits") if f.isdigit()}
+    part_dirs = [d for d in (cp / "state" / "0").iterdir() if d.name.isdigit()]
+    assert part_dirs
+    for part in part_dirs:
+        names = set(os.listdir(part))
+        versions = {int(m.group(1)) for n in names if (m := re.fullmatch(r"(\d+)\.delta", n))}
+        assert versions, f"no state deltas in {part}: {sorted(names)}"
+        for v in versions:
+            assert f".{v}.delta.crc" in names, f"Hadoop .crc missing in {part}"
+            assert f"{v}.delta.crc" in names, f"checkpoint checksum missing in {part}"
+        # Every committed batch's state version is on disk.
+        assert {b + 1 for b in commits} <= versions
+
+
 # -- loopback TCP broker (r6 next-round #5) -----------------------------------
 
 

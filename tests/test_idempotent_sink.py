@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Row
 
 
@@ -14,11 +16,19 @@ def test_replayed_batch_id_is_skipped(spark, tmp_path):
     write(spark.createDataFrame([Row(v=3)]), 1)
     # crash-replay of batch 1 with (hypothetically re-computed) same data:
     write(spark.createDataFrame([Row(v=3)]), 1)
-    assert committed_batches(out) == [0, 1]
+    # One write task per task slot: an 8-partition batch writes at most
+    # defaultParallelism part files, and all of its rows.
+    wide = spark.range(100, 180, numPartitions=8).selectExpr("CAST(id AS INT) AS v")
+    write(wide, 2)
+    parts = [f for f in os.listdir(f"{out}/batch_id=2") if f.startswith("part-")]
+    assert 1 <= len(parts) <= min(8, spark.sparkContext.defaultParallelism)
+    # ...and its replay is skipped like any other committed id.
+    write(spark.createDataFrame([Row(v=-1)]), 2)
+    assert committed_batches(out) == [0, 1, 2]
     got = spark.read.parquet(out)
-    assert sorted(r.v for r in got.collect()) == [1, 2, 3]
+    assert sorted(r.v for r in got.collect()) == [1, 2, 3, *range(100, 180)]
     # batch_id is a readable partition column (audit trail)
-    assert sorted(r.batch_id for r in got.select("batch_id").distinct().collect()) == [0, 1]
+    assert sorted(r.batch_id for r in got.select("batch_id").distinct().collect()) == [0, 1, 2]
 
 
 def test_streaming_end_to_end_exactly_once(spark, tmp_path):

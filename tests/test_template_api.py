@@ -317,6 +317,108 @@ def test_progress_param_validation(spark):
         server.shutdown()
 
 
+def _fake_progress(batch_id: int):
+    """A listener event carrying only the fields onQueryProgress reads."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        progress=SimpleNamespace(
+            id="q", name="q", batchId=batch_id, numInputRows=1,
+            stateOperators=[], durationMs={"triggerExecution": 1},
+        )
+    )
+
+
+def test_progress_buffer_is_capped_with_absolute_cursor():
+    """The listener keeps the last PROGRESS_CAP entries; `since=N` still
+    means "after the N-th entry ever recorded", and a cursor older than
+    the oldest kept entry resumes there."""
+    from nyuki_spark.streaming.listener import PROGRESS_CAP, MetricsListener
+
+    listener = MetricsListener()
+    total = PROGRESS_CAP + 5
+    for b in range(total):
+        listener.onQueryProgress(_fake_progress(b))
+    assert len(listener.progress) == PROGRESS_CAP
+    assert listener.progress[0].batch_id == 5  # the 5 oldest were dropped
+    # Cursor inside the kept range: exactly the entries after it.
+    start, got = listener.events_since(total - 3)
+    assert start == total - 3
+    assert [p.batch_id for p in got] == [total - 3, total - 2, total - 1]
+    # A client that fell behind resumes at the oldest kept entry.
+    start, got = listener.events_since(2)
+    assert start == 5 and len(got) == PROGRESS_CAP
+    # Past the end: empty page, cursor at the recorded count.
+    assert listener.events_since(total + 100) == (total, [])
+
+    server = serve(TemplateStore(), listener=listener)
+    port = server.server_address[1]
+    try:
+        with urllib.request.urlopen(
+            f"http://127.0.0.1:{port}/progress?since={total - 2}", timeout=10
+        ) as r:
+            snap = json.loads(r.read())
+        assert snap["since"] == total - 2 and snap["next"] == total
+        assert [e["batch_id"] for e in snap["events"]] == [total - 2, total - 1]
+        with urllib.request.urlopen(
+            f"http://127.0.0.1:{port}/progress?since=0", timeout=10
+        ) as r:
+            snap = json.loads(r.read())
+        assert snap["since"] == 5 and snap["next"] == total
+        assert snap["events"][0]["batch_id"] == 5
+    finally:
+        server.shutdown()
+    # clear() drops the kept entries; sequence numbers keep counting.
+    listener.clear()
+    assert listener.progress == [] and listener.events_since(0) == (total, [])
+
+
+def test_progress_buffer_concurrent_appends():
+    """Listener-thread appends racing cursor reads lose no sequence
+    number: after 8 writers x 1500 events the cursor sits at 12000 and
+    the kept page is exactly the cap."""
+    import sys
+    import threading
+
+    from nyuki_spark.streaming.listener import PROGRESS_CAP, MetricsListener
+
+    listener = MetricsListener()
+    n_threads, per_thread = 8, 1500
+    pages: list[tuple[int, int]] = []
+
+    def writer():
+        for b in range(per_thread):
+            listener.onQueryProgress(_fake_progress(b))
+
+    def reader():
+        for _ in range(200):
+            start, got = listener.events_since(0)
+            pages.append((start, len(got)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer) for _ in range(n_threads)]
+        threads.append(threading.Thread(target=reader))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    total = n_threads * per_thread
+    assert listener.events_since(total + 1) == (total, [])
+    start, got = listener.events_since(0)
+    assert start == total - PROGRESS_CAP and len(got) == PROGRESS_CAP
+    # The reader finished, and every page it saw was one consistent
+    # snapshot: a page starts past 0 only once the cap drops entries.
+    assert len(pages) == 200
+    for s, n in pages:
+        assert s + n <= total and n <= PROGRESS_CAP
+        assert s == 0 or n == PROGRESS_CAP
+
+
 def test_apply_subflow_cycle_and_unknown():
     """apply (sub-workflow invocation) resolves against the template
     registry at compile time: unknown names and cycles are SpecErrors,
