@@ -281,6 +281,16 @@ def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str
     the (id, shingle) rows distinct BY CONSTRUCTION, so the downstream
     distinct exchange is gone from every consumer. Order of rows within a
     doc is unspecified, as before (every consumer aggregates or joins).
+
+    The output ends in the ``mapInPandas`` with no exchange after it, so
+    ReusedExchange cannot share it: every reference re-runs the scan and
+    the Python stage. A consumer that reads the table more than once pins
+    it with ``localCheckpoint()`` (operators/dedup.py pair operators,
+    llm_shingle_novelty) where a per-id A/B shows the pin winning; a
+    single-reference consumer (llm_bigram_topk) uses it as is and pays no
+    extra job. llm_source_overlap and llm_decontaminate read it twice but
+    their pins did not win at sf0.1 (tests/test_plan_registry_sweep.py
+    PY_REPEAT_ALLOWLIST).
     """
     from pyspark.sql.types import StringType, StructField, StructType
 

@@ -426,14 +426,20 @@ def ngram_jaccard_pairs(
         does not want. Uncapped (default) behavior is byte-identical to
         the exact oracle.
     """
-    # NOT materialized (r12 A/B): a localCheckpoint of the shingle table
-    # here REGRESSED the family (llm_ngram_jaccard 2.12 -> 2.37 s,
-    # llm_subset_containment 1.64 -> 2.53 s, llm_dedup_eval 3.53 -> 4.97 s
-    # isolated medians at sf0.1) — ReusedExchange already dedupes the
-    # repeated identical shingle subtrees inside the final job, so the
-    # checkpoint only added a serial block-manager write of the widest
-    # (string-heavy) table in the funnel.
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col)
+    # Pinned: every branch below reads the shingle table at least twice
+    # (sizes + shared counts; the capped funnel adds the hot-key census and
+    # the hot/cold splits). word_ngrams ends in a mapInPandas with no
+    # exchange after it, so each read would re-run the scan and the Python
+    # stage — ReusedExchange has nothing to share, and a repartition tail
+    # does not help either: the optimizer pushes different inferred
+    # isnotnull filters below it per consumer, so the subtrees stop
+    # matching. r12's A/B against this pin (llm_ngram_jaccard 2.12 ->
+    # 2.37 s) predates the mapInPandas rewrite, when the table still ended
+    # in a distinct exchange that ReusedExchange shared. With the pin,
+    # isolated sf0.1 medians over two rounds (unpinned -> pinned):
+    # llm_subset_containment_capped 5.05/5.47 -> 4.43/4.46 s,
+    # llm_dedup_eval 7.69/8.09 -> 6.53/6.27 s.
+    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col).localCheckpoint()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
     if candidates is not None:
         shared = _pair_shared_counts(candidates, sh, id_col)
@@ -497,8 +503,8 @@ def containment_pairs(
     shared, so the prefilter loses nothing); uncapped default is the exact
     all-shared-shingle self-join for oracle verification only.
     """
-    # Not materialized — same ReusedExchange A/B as ngram_jaccard_pairs (r12).
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col)
+    # Pinned for the same reason as in ngram_jaccard_pairs.
+    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col).localCheckpoint()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
     if candidates is not None:
         shared = _pair_shared_counts(candidates, sh, id_col)

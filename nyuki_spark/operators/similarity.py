@@ -17,8 +17,6 @@ against brute force in tests/test_similarity.py).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -380,6 +378,7 @@ def embedding_candidates_lsh(
     bucket_length: float = 2.0,
     num_hash_tables: int = 8,
     seed: int = 42,
+    gram_block: int = 2048,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs with cosine >= ``sim_floor``, via LSH.
 
@@ -434,10 +433,10 @@ def embedding_candidates_lsh(
     # allocated O(n^2) doubles (plus an O(n^2) bool triu) in one Python
     # worker — an OOM at scale even though the group's O(n*d) embeddings
     # fit. Tiling bounds the pairwise intermediates to O(block^2) per tile
-    # (32 MB of float64 at the 2048 default) regardless of bucket size;
-    # the emitted pair set is bit-identical (same strict d2 < r2 on the
-    # same float64 operands, same upper-triangle enumeration).
-    gram_block = int(os.environ.get("NYUKI_LSH_GRAM_BLOCK", "2048"))
+    # (32 MB of float64 at the 2048 default of ``gram_block``) regardless
+    # of bucket size; the emitted pair set is bit-identical (same strict
+    # d2 < r2 on the same float64 operands, same upper-triangle
+    # enumeration).
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         m = np.vstack(pdf["_e"].to_numpy()).astype(np.float64)

@@ -26,9 +26,11 @@ from nyuki_spark.functions.text import (
     rolling_hash,
     simhash60,
     word_ngram_array,
+    word_ngrams,
 )
 from nyuki_spark.operators.dedup import (
     collapse_text_groups,
+    containment_pairs,
     expand_collapsed_pairs,
     embedding_neardup_pairs,
     minhash_band_pairs,
@@ -241,6 +243,47 @@ register(
 # -- n-gram Jaccard ----------------------------------------------------------
 
 
+def _text_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-dedup representatives: (doc_id, text) with the min doc_id per
+    distinct non-null text — the input of the capped and containment
+    funnels."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("text").isNotNull())
+        .groupBy("text")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", "text")
+    )
+
+
+def _reps_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shingle table that ngram_jaccard_pairs / containment_pairs pin
+    with localCheckpoint, as built before the pin — registered in
+    SWEEP_INTERMEDIATES so the plan sweep still sees the shingle stage."""
+    return word_ngrams(_text_reps(spark, sf_dir), n=3)
+
+
+def _collapsed_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_reps_shingle_stage` for the ids whose representatives come
+    from collapse_text_groups (llm_ngram_jaccard, llm_dedup_eval)."""
+    _, uniq, _ = collapse_text_groups(load_table(spark, sf_dir, "documents"))
+    return word_ngrams(uniq, n=3)
+
+
+def _docs_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pre-pin shingle table of llm_shingle_novelty (word_ngrams over
+    every document)."""
+    return word_ngrams(load_table(spark, sf_dir, "documents"), n=3)
+
+
+SWEEP_INTERMEDIATES["llm_ngram_jaccard"] = _collapsed_shingle_stage
+SWEEP_INTERMEDIATES["llm_dedup_eval"] = _collapsed_shingle_stage
+SWEEP_INTERMEDIATES["llm_ngram_jaccard_capped"] = _reps_shingle_stage
+SWEEP_INTERMEDIATES["llm_subset_containment"] = _reps_shingle_stage
+SWEEP_INTERMEDIATES["llm_subset_containment_capped"] = _reps_shingle_stage
+SWEEP_INTERMEDIATES["llm_shingle_novelty"] = _docs_shingle_stage
+
+
 def _jaccard_fn(
     spark: SparkSession,
     sf_dir: str,
@@ -306,13 +349,7 @@ def _jaccard_capped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate prefix and shows flat capped cost vs quadratic
     uncapped candidate growth (table in BASELINE.md §r7).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    uniq = (
-        docs.where(F.col("text").isNotNull())
-        .groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "text")
-    )
+    uniq = _text_reps(spark, sf_dir)
     return ngram_jaccard_pairs(uniq, threshold=0.5, n=3, df_cap=50).orderBy(
         "id_a", "id_b"
     )
@@ -2382,29 +2419,10 @@ register(
 # -- char-bigram LM quality score (round 5) -----------------------------------
 
 
-def _perplexity_proxy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perplexity-proxy quality scoring: train a char-bigram language
-    model ON the corpus (conditional counts), then score every document
-    by its average log-probability — the KenLM-style quality filter of
-    public training-data pipelines, reduced to its distributable core.
-    Low scores flag documents whose character sequences are unlike the
-    corpus (mojibake, binary spill, boilerplate).
-
-    Plan: ONE linear char-bigram explode immediately collapses to
-    per-(doc, bigram) COUNTS — the only fact-sized shuffle. The model
-    tables derive from those counts (bigram totals; first-char totals
-    roll up from bigram totals, no second scan), both alphabet-bounded
-    and broadcast back; the score is the count-weighted sum of log
-    conditionals — mathematically the same average as per-occurrence
-    rows, at ~1/20th the join volume (distinct bigrams per doc, not
-    characters per doc). This aggregate-before-join shape is what holds
-    at 100 TB: the model fits in a broadcast regardless of corpus size.
-
-    Every document bigram appears in the corpus counts by construction
-    (the corpus scored is the training corpus), so no smoothing term is
-    needed and both engines compute identical count ratios; the weighted
-    sum is the one FP-order-dependent step, absorbed by the 4-dp round.
-    """
+def _char_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(doc, char bigram) counts (doc_id, bg, cnt, c1) of
+    llm_perplexity_proxy, as built before its localCheckpoint pin — also
+    registered in SWEEP_INTERMEDIATES for the plan sweep."""
     docs = load_table(spark, sf_dir, "documents")
 
     from pyspark.sql.types import (
@@ -2450,12 +2468,40 @@ def _perplexity_proxy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": out_id, "bg": out_bg, "cnt": out_cnt}
             )
 
-    dc = (
+    return (
         docs.where(F.length("text") >= 2)
         .select("doc_id", "text")
         .mapInPandas(_bigram_counts, dc_schema)
         .withColumn("c1", F.substring(F.col("bg"), 1, 1))
     )
+
+
+def _perplexity_proxy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perplexity-proxy quality scoring: train a char-bigram language
+    model ON the corpus (conditional counts), then score every document
+    by its average log-probability — the KenLM-style quality filter of
+    public training-data pipelines, reduced to its distributable core.
+    Low scores flag documents whose character sequences are unlike the
+    corpus (mojibake, binary spill, boilerplate).
+
+    Plan: ONE linear char-bigram explode immediately collapses to
+    per-(doc, bigram) COUNTS — the only fact-sized shuffle. The model
+    tables derive from those counts (bigram totals; first-char totals
+    roll up from bigram totals, no second scan), both alphabet-bounded
+    and broadcast back; the score is the count-weighted sum of log
+    conditionals — mathematically the same average as per-occurrence
+    rows, at ~1/20th the join volume (distinct bigrams per doc, not
+    characters per doc). This aggregate-before-join shape is what holds
+    at 100 TB: the model fits in a broadcast regardless of corpus size.
+
+    Every document bigram appears in the corpus counts by construction
+    (the corpus scored is the training corpus), so no smoothing term is
+    needed and both engines compute identical count ratios; the weighted
+    sum is the one FP-order-dependent step, absorbed by the 4-dp round.
+    """
+    # Pinned: the counts feed both the model (bn, cn) and the scoring
+    # join, and the Arrow stage has no exchange after it to reuse.
+    dc = _char_bigram_counts(spark, sf_dir).localCheckpoint()
     bn = dc.groupBy("bg").agg(F.sum("cnt").alias("nb"))
     cn = bn.groupBy(F.substring(F.col("bg"), 1, 1).alias("c1")).agg(
         F.sum("nb").alias("nc")
@@ -2506,6 +2552,8 @@ register(
         "broadcast onto a linear bigram explode"
     ),
 )
+
+SWEEP_INTERMEDIATES["llm_perplexity_proxy"] = _char_bigram_counts
 
 
 # -- int8 scalar quantization round trip (round 5) ----------------------------
@@ -2805,10 +2853,10 @@ def _shingle_novelty_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle's first-seen doc (partial map-side min), one join back per
     (doc, shingle) row, one per-doc aggregate. No pair join anywhere —
     cost tracks the shingle table, linear in corpus size."""
-    from nyuki_spark.functions.text import word_ngrams
-
     docs = load_table(spark, sf_dir, "documents")
-    grams = word_ngrams(docs, n=3)
+    # Pinned: read twice (first-seen aggregate + join back), and
+    # word_ngrams has no exchange for ReusedExchange to share.
+    grams = word_ngrams(docs, n=3).localCheckpoint()
     first = grams.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         grams.join(first, "shingle")
@@ -2877,8 +2925,6 @@ def _source_overlap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-count aggregate, one join back, one per-source rollup — every
     stage a hash equi-join/aggregate linear in the shingle table, no
     pair join (the same no-pairs discipline as llm_shingle_novelty)."""
-    from nyuki_spark.functions.text import word_ngrams
-
     docs = load_table(spark, sf_dir, "documents")
     grams = word_ngrams(docs, n=3)
     src = (
@@ -3140,15 +3186,7 @@ def _containment_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact truth tier (like llm_ngram_jaccard); the 100 TB posture is
     llm_subset_containment_capped below.
     """
-    from nyuki_spark.operators.dedup import containment_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    uniq = (
-        docs.where(F.col("text").isNotNull())
-        .groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "text")
-    )
+    uniq = _text_reps(spark, sf_dir)
     return containment_pairs(uniq, threshold=0.8, n=3).orderBy("id_a", "id_b")
 
 
@@ -3196,15 +3234,7 @@ def _containment_capped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verified, and scripts/shingle_skew_probe.py asserts the capped
     funnel flat (and output-identical) at 10^4x boilerplate duplication.
     """
-    from nyuki_spark.operators.dedup import containment_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    uniq = (
-        docs.where(F.col("text").isNotNull())
-        .groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "text")
-    )
+    uniq = _text_reps(spark, sf_dir)
     return containment_pairs(uniq, threshold=0.8, n=3, df_cap=50).orderBy(
         "id_a", "id_b"
     )

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyuki_spark.streaming.runner import remove_orphan_temp_files
+
 __all__ = ["TriggerRouter"]
 
 PipelineFn = Callable[[DataFrame], DataFrame]
@@ -62,14 +64,18 @@ class TriggerRouter:
         checkpoint_root: str,
         available_now: bool = False,
     ) -> list:
-        """One writeStream per trigger (independent checkpoints)."""
+        """One writeStream per trigger (independent checkpoints). Each
+        query starts after its checkpoint's orphan temp files are removed
+        (:func:`~nyuki_spark.streaming.runner.remove_orphan_temp_files`)."""
         queries = []
         for topic, pipeline in self.triggers.items():
             out = pipeline(sdf.where(F.col(topic_col) == topic))
             sink = sink_for(topic)
+            checkpoint = f"{checkpoint_root}/{topic}"
+            remove_orphan_temp_files(checkpoint)
             writer = (
                 out.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{checkpoint_root}/{topic}")
+                .option("checkpointLocation", checkpoint)
                 .foreachBatch(lambda df, _id, t=topic, s=sink: s(t, df))
             )
             if available_now:

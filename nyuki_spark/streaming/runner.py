@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -44,6 +45,7 @@ from nyuki_spark.streaming.replay import replay_stream
 
 __all__ = [
     "await_drain",
+    "remove_orphan_temp_files",
     "run_append_foreach_batch",
     "run_foreach_batch",
     "run_live",
@@ -149,6 +151,33 @@ def run_to_table(
         spark.catalog.dropTempView(name)
 
 
+# A checkpoint file's temp name while it is written (".<name>.<uuid>.tmp")
+# and Hadoop's checksum of that temp file (".<temp name>.crc").
+_CHECKPOINT_TMP = re.compile(
+    r"\..+\.[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\.tmp(\.crc)?"
+)
+
+
+def remove_orphan_temp_files(checkpoint_dir: str) -> None:
+    """Delete the temp files a state commit left under
+    ``<checkpoint_dir>/state``.
+
+    ``FileSystemBasedCheckpointFileManager`` (session.py) writes each state
+    file to a temp name and renames it into place. When that version is
+    committed a second time — a restart after a crash that followed the
+    state commit, or a ``foreachBatch`` function that runs its DataFrame
+    twice — the rename onto the existing file fails on the local
+    filesystem, Spark ignores the failure (the existing file is the same
+    version) and the temp file and its ``.crc`` stay behind; state
+    maintenance never deletes them. Call this only while no query runs on
+    the checkpoint: before a (re)start, or after the query stopped.
+    """
+    for root, _dirs, files in os.walk(os.path.join(checkpoint_dir, "state")):
+        for name in files:
+            if _CHECKPOINT_TMP.fullmatch(name):
+                os.remove(os.path.join(root, name))
+
+
 def run_foreach_batch(
     sdf: DataFrame,
     fn: Callable[[DataFrame, int], None],
@@ -156,7 +185,9 @@ def run_foreach_batch(
 ) -> None:
     """Drain a streaming DataFrame in APPEND mode through
     ``foreachBatch(fn)`` — the shape of a per-micro-batch fold into
-    caller-owned state."""
+    caller-owned state. Orphan checkpoint temp files are removed before
+    the query starts and after it stops, however the drain ends."""
+    remove_orphan_temp_files(checkpoint_dir)
     q = (
         sdf.writeStream.foreachBatch(fn)
         .outputMode("append")
@@ -164,7 +195,10 @@ def run_foreach_batch(
         .trigger(availableNow=True)
         .start()
     )
-    await_drain([q])
+    try:
+        await_drain([q])
+    finally:
+        remove_orphan_temp_files(checkpoint_dir)
 
 
 def run_append_foreach_batch(

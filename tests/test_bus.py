@@ -312,11 +312,14 @@ def test_stateful_crash_after_state_commit_then_restart(spark, tmp_path):
     re-runs it and re-commits a state version that already exists on disk
     (through the checkpoint manager's rename) before the coalesced sink
     write. Every unique event must reach the sink once, a duplicate in the
-    next batch must still be dropped by the restored state, and every
-    state partition must keep its delta files and both checksum files."""
+    next batch must still be dropped by the restored state, every state
+    partition must keep its delta files and both checksum files, and the
+    re-commits must leave no temp file in the checkpoint (the runner
+    removes them before a start and after a stop)."""
     import re
 
     from nyuki_spark.streaming.dedup import dedup_within_watermark
+    from nyuki_spark.streaming.runner import run_foreach_batch
     from nyuki_spark.streaming.sink import idempotent_parquet_sink
 
     register_bus(spark)
@@ -340,14 +343,14 @@ def test_stateful_crash_after_state_commit_then_restart(spark, tmp_path):
             .select("e.*")
             .withColumn("ts", F.timestamp_millis("ts_ms"))
         )
-        q = (
-            dedup_within_watermark(events, ["event_id"], "ts", "10 seconds")
-            .writeStream.foreachBatch(crash_after_state_commit)
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            dedup_within_watermark(events, ["event_id"], "ts", "10 seconds"),
+            crash_after_state_commit,
+            str(cp),
         )
-        q.awaitTermination(120)
+
+    def temp_files():
+        return sorted(str(p) for p in cp.rglob("*") if re.search(r"\.tmp(\.crc)?$", p.name))
 
     t0 = 1_700_000_000_000
 
@@ -365,8 +368,10 @@ def test_stateful_crash_after_state_commit_then_restart(spark, tmp_path):
     assert not (cp / "commits" / str(crashed)).exists()
     assert (cp / "state" / "0" / "0" / f"{crashed + 1}.delta").exists()
     run()  # restart: the crashed batch re-runs on its committed state
+    assert not temp_files(), f"checkpoint temp files left: {temp_files()}"
     publish_rows(root, "ev", [ev("b", 4), ev("d", 5)])  # b: dup within watermark
     run()
+    assert not temp_files(), f"checkpoint temp files left: {temp_files()}"
 
     got = sorted(r.event_id for r in spark.read.parquet(out).collect())
     assert got == ["a", "b", "c", "d"], f"exactly-once violated: {got}"

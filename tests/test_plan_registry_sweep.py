@@ -8,9 +8,18 @@ reason the pattern is legitimate for that query (bounded build side,
 partial-aggregate scalar collect, deliberately-scoped verification pass).
 The allowlist is checked for staleness — an entry whose query no longer
 trips the sweep must be removed, so the list can only shrink.
+
+A second sweep checks intra-query reuse: no Python node (a stage that runs
+user code in Python workers) may appear twice in one query's plan over the
+same input, because each copy runs the Python stage again. Repeats that
+remain are listed in ``PY_REPEAT_ALLOWLIST`` with a reason, under the same
+staleness rule.
 """
 
 from __future__ import annotations
+
+import re
+from collections import Counter
 
 import pytest
 
@@ -34,6 +43,23 @@ _WRAPPER_CLASSES = ("WholeStageCodegenExec", "InputAdapter", "AQEShuffleReadExec
 # ``.plan()``); the pretty-printed string used to surface these as extra
 # "Subquery" sections, so the walk must traverse them too.
 _SUBQUERY_EXPRS = ("ScalarSubquery", "InSubqueryExec", "DynamicPruningSubquery")
+
+
+def _child_plans(node) -> list:
+    """A physical node's children plus the plans embedded in its subquery
+    expressions."""
+    ch = node.children()
+    out = [ch.apply(i) for i in range(ch.size())]
+    exprs = node.expressions()
+    estack = [exprs.apply(i) for i in range(exprs.size())]
+    while estack:
+        e = estack.pop()
+        if e.getClass().getSimpleName() in _SUBQUERY_EXPRS:
+            out.append(e.plan())
+        ech = e.children()
+        for i in range(ech.size()):
+            estack.append(ech.apply(i))
+    return out
 
 
 def _iter_plan_nodes(jplan):
@@ -66,18 +92,7 @@ def _iter_plan_nodes(jplan):
             # (r5 advice: no pinned stage may dodge the sweep).
             stack.append(n.relation().cachedPlan())
             continue
-        ch = n.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-        exprs = n.expressions()
-        estack = [exprs.apply(i) for i in range(exprs.size())]
-        while estack:
-            e = estack.pop()
-            if e.getClass().getSimpleName() in _SUBQUERY_EXPRS:
-                stack.append(e.plan())
-            ech = e.children()
-            for i in range(ech.size()):
-                estack.append(ech.apply(i))
+        stack.extend(_child_plans(n))
 
 
 def _producer(node):
@@ -512,12 +527,102 @@ def test_no_scale_killers(qid, spark, sf_dir):
 
 
 def test_allowlist_and_intermediates_reference_live_ids():
-    """Hygiene: every ALLOWLIST key and every SWEEP_INTERMEDIATES key must
-    name a registered query — a renamed/removed id would otherwise leave a
-    dead exemption (or a dead barrier-sweep) behind silently."""
-    dead_allow = [q for q in ALLOWLIST if q not in REGISTRY]
+    """Hygiene: every ALLOWLIST / PY_REPEAT_ALLOWLIST key and every
+    SWEEP_INTERMEDIATES key must name a registered query — a renamed/removed
+    id would otherwise leave a dead exemption (or a dead barrier-sweep)
+    behind silently."""
+    dead_allow = [q for q in (*ALLOWLIST, *PY_REPEAT_ALLOWLIST) if q not in REGISTRY]
     dead_inter = [q for q in SWEEP_INTERMEDIATES if q not in REGISTRY]
     assert not dead_allow, f"ALLOWLIST entries for unknown ids: {dead_allow}"
     assert not dead_inter, (
         f"SWEEP_INTERMEDIATES entries for unknown ids: {dead_inter}"
+    )
+
+
+# -- Python-node repeats ------------------------------------------------------
+
+# Physical operators that run user code in Python workers (the same class
+# name rule as perfbench/tracing.py's python.repeat_ratio).
+_PY_NODE = re.compile(r"(InPandas|InArrow|EvalPython|PythonUDTF|WindowPython|PythonScan)")
+# Ids that differ between two copies of the same subtree: expression ids
+# (stripped the same way by the tracer) and exchange plan ids.
+_PLAN_IDS = re.compile(r"#\d+L?|plan_id=\d+")
+
+
+def _python_node_repeats(jplan) -> list[str]:
+    """Python nodes that appear more than once in a plan, each given as
+    its subtree string with ids stripped (identical strings = the same
+    Python stage over the same input).
+
+    Walks the INITIAL plan of every AdaptiveSparkPlanExec: the final plan
+    depends on runtime sizes (at a small scale AQE broadcasts one side and
+    shows one copy), the initial plan does not. A ReusedExchange leaf is
+    not descended (it reads the exchange it reuses), and a persisted
+    relation's plan is walked once, however many scans read it.
+    """
+    seen_cached: set[str] = set()
+    subtrees: list[str] = []
+    stack = [jplan]
+    while stack:
+        n = stack.pop()
+        cls = n.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(n.initialPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(n.plan())
+            continue
+        if cls == "ReusedExchangeExec":
+            continue
+        if cls == "InMemoryTableScanExec":
+            cached = n.relation().cachedPlan()
+            key = _PLAN_IDS.sub("", cached.treeString())
+            if key not in seen_cached:
+                seen_cached.add(key)
+                stack.append(cached)
+            continue
+        if _PY_NODE.search(cls):
+            subtrees.append(_PLAN_IDS.sub("", n.treeString()))
+        stack.extend(_child_plans(n))
+    return sorted(t for t, k in Counter(subtrees).items() if k > 1)
+
+
+# qid -> reason a Python stage legitimately runs more than once. An entry
+# whose query no longer repeats a Python node must be removed.
+PY_REPEAT_ALLOWLIST: dict[str, str] = {
+    "llm_decontaminate": (
+        "both renamed sides of the 5-gram shingle self-join run word_ngrams "
+        "over the ~unique-text reps; a localCheckpoint pin did not win at "
+        "sf0.1 (isolated medians, unpinned -> pinned, three rounds: "
+        "1.68 -> 1.84, 1.87 -> 1.87, 1.89 -> 1.64 s)"
+    ),
+    "net_assortativity": (
+        "the _pair_rows stage of _supplier_backbone feeds both the degree "
+        "aggregate and the stub joins of an unpinned backbone; the sibling "
+        "net_* ids pin it with localCheckpoint(eager=False), but a pin here "
+        "has not been measured yet"
+    ),
+    "llm_source_overlap": (
+        "the per-shingle source count and the join back read the "
+        "(source, shingle) projection with different inferred filters, so "
+        "word_ngrams runs twice; a localCheckpoint pin did not win at sf0.1 "
+        "(2.03 -> 2.84, 2.33 -> 2.08, 2.37 -> 2.38 s)"
+    ),
+}
+
+
+@pytest.mark.parametrize("qid", sorted(REGISTRY))
+def test_no_python_node_repeats(qid, spark, sf_dir):
+    df = REGISTRY[qid].run(spark, sf_dir)
+    repeats = _python_node_repeats(df._jdf.queryExecution().executedPlan())
+    if qid in PY_REPEAT_ALLOWLIST:
+        assert repeats, (
+            f"{qid}: no Python node repeats any more — remove its "
+            f"PY_REPEAT_ALLOWLIST entry"
+        )
+        return
+    assert not repeats, (
+        f"{qid}: {len(repeats)} Python stage(s) run more than once; pin the "
+        f"shared input at the consumer (localCheckpoint) or allowlist it "
+        f"with a reason. First:\n{repeats[0][:1200]}"
     )

@@ -82,7 +82,7 @@ def test_lsh_candidate_pairs_total_recall_on_fixture(spark, sf_dir):
     assert sorted(map(tuple, exact)) == sorted(map(tuple, pruned))
 
 
-def test_lsh_giant_bucket_tiled_pairs_identical(spark, sf_dir, monkeypatch):
+def test_lsh_giant_bucket_tiled_pairs_identical(spark, sf_dir):
     """r13 (VERDICT #2): a degenerate bucketLength puts EVERY vector in one
     (table, bucket) group; the per-group pairwise pass must tile, not
     allocate O(n^2) at once, and tiling must not change the emitted set.
@@ -100,15 +100,15 @@ def test_lsh_giant_bucket_tiled_pairs_identical(spark, sf_dir, monkeypatch):
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def pairs(block: str) -> set:
-        monkeypatch.setenv("NYUKI_LSH_GRAM_BLOCK", block)
+    def pairs(block: int) -> set:
         got = embedding_candidates_lsh(
-            emb, sim_floor=0.35, bucket_length=1e9, num_hash_tables=2
+            emb, sim_floor=0.35, bucket_length=1e9, num_hash_tables=2,
+            gram_block=block,
         ).collect()
         return {(r.id_a, r.id_b) for r in got}
 
-    tiled = pairs("7")
-    assert tiled == pairs("1000000")
+    tiled = pairs(7)
+    assert tiled == pairs(1000000)
 
     import numpy as np
 
