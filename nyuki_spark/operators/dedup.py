@@ -44,6 +44,7 @@ __all__ = [
     "exact_dedup_groups",
     "exact_dedup_keep_first",
     "simhash_chunks",
+    "simhash_sketches",
     "simhash_pairs",
     "minhash_band_pairs",
     "minhash_neardup_pairs",
@@ -124,6 +125,15 @@ def simhash_chunks(
     ).select("id", "sh", "bc.band", "bc.chunk")
 
 
+def simhash_sketches(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, sh): the per-document 60-bit sketch table that
+    :func:`simhash_pairs` pins before its band self-join. Callers outside
+    the operator use it to show the plan sweep the pre-pin stage."""
+    return df.select(F.col(id_col).alias("id"), simhash60(text_col).alias("sh"))
+
+
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 3,
@@ -145,9 +155,7 @@ def simhash_pairs(
     # plan showed the ArrowEvalPython chain twice). The sketch table is two
     # longs per unique doc — localCheckpoint is block-manager-sized at any
     # corpus scale and also truncates lineage for downstream CC loops.
-    sh_tbl = df.select(
-        F.col(id_col).alias("id"), simhash60(text_col).alias("sh")
-    ).localCheckpoint()
+    sh_tbl = simhash_sketches(df, id_col, text_col).localCheckpoint()
     chunks = simhash_chunks(sh_tbl, id_col="id", bands=bands, sketch_col="sh")
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (

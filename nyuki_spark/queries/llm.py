@@ -37,6 +37,7 @@ from nyuki_spark.operators.dedup import (
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
+    simhash_sketches,
 )
 from nyuki_spark.operators.kmeans import kmeans_assign
 from nyuki_spark.operators.similarity import knn_cosine_lsh
@@ -277,6 +278,8 @@ def _docs_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SWEEP_INTERMEDIATES["llm_ngram_jaccard"] = _collapsed_shingle_stage
+# Wins over the simhash sketch builder for llm_dedup_eval (see
+# _collapsed_simhash_stage).
 SWEEP_INTERMEDIATES["llm_dedup_eval"] = _collapsed_shingle_stage
 SWEEP_INTERMEDIATES["llm_ngram_jaccard_capped"] = _reps_shingle_stage
 SWEEP_INTERMEDIATES["llm_subset_containment"] = _reps_shingle_stage
@@ -1356,6 +1359,21 @@ register(
 )
 
 
+def _quality_kept(docs: DataFrame) -> DataFrame:
+    """llm_pipeline_e2e's quality filter: >= 40 tokens and a stop-word
+    ratio <= 0.12."""
+    from nyuki_spark.functions.text import tokens
+
+    t = tokens("text")
+    n_tok = F.size(t)
+    stop_ratio = (
+        F.size(F.filter(t, lambda x: x.isin("the", "a", "and", "of", "to")))
+        .cast("double")
+        / n_tok
+    )
+    return docs.filter((n_tok >= 40) & (stop_ratio <= 0.12))
+
+
 def _pipeline_e2e_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone corpus-build pipeline as ONE composed Catalyst program:
     quality filter -> near-dup survivor selection -> leakage-safe split
@@ -1370,19 +1388,10 @@ def _pipeline_e2e_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own bounded key (text group / component / split) — no stage
     re-scans the raw corpus.
     """
-    from nyuki_spark.functions.text import tokens
     from nyuki_spark.operators.components import connected_components
     from nyuki_spark.operators.sample import hash_fraction
 
-    docs = load_table(spark, sf_dir, "documents")
-    t = tokens("text")
-    n_tok = F.size(t)
-    stop_ratio = (
-        F.size(F.filter(t, lambda x: x.isin("the", "a", "and", "of", "to")))
-        .cast("double")
-        / n_tok
-    )
-    kept = docs.filter((n_tok >= 40) & (stop_ratio <= 0.12))
+    kept = _quality_kept(load_table(spark, sf_dir, "documents"))
 
     _, edges = _collapsed_simhash_edges(kept)
     comp = connected_components(edges, id_out="doc_id", comp_out="component")
@@ -1466,6 +1475,42 @@ register(
         "stage is independently oracle-verified, the composition is too"
     ),
 )
+
+
+def _collapsed_simhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sketch table that simhash_pairs pins with localCheckpoint, as
+    built before the pin over the duplicate-collapsed documents —
+    registered in SWEEP_INTERMEDIATES so the plan sweep still sees the
+    simhash stage."""
+    _, uniq, _ = collapse_text_groups(load_table(spark, sf_dir, "documents"))
+    return simhash_sketches(uniq)
+
+
+def _pipeline_simhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_collapsed_simhash_stage` over llm_pipeline_e2e's
+    quality-kept documents."""
+    kept = _quality_kept(load_table(spark, sf_dir, "documents"))
+    _, uniq, _ = collapse_text_groups(kept)
+    return simhash_sketches(uniq)
+
+
+SWEEP_INTERMEDIATES.update(
+    dict.fromkeys(
+        (
+            "llm_simhash_pairs",
+            "llm_neardup_clusters",
+            "llm_dedup_groups",
+            "llm_survivor_pick",
+            "llm_leakage_safe_split",
+        ),
+        _collapsed_simhash_stage,
+    )
+)
+SWEEP_INTERMEDIATES["llm_pipeline_e2e"] = _pipeline_simhash_stage
+# llm_dedup_eval pins the same sketch table (through _simhash_pairs_fn),
+# but the sweep takes one builder per id: it keeps _collapsed_shingle_stage,
+# and its sketch stage, over the same collapsed documents, is swept under
+# llm_simhash_pairs.
 
 
 # -- portable MinHash (round 4b) ---------------------------------------------

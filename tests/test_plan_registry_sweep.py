@@ -596,12 +596,6 @@ PY_REPEAT_ALLOWLIST: dict[str, str] = {
         "sf0.1 (isolated medians, unpinned -> pinned, three rounds: "
         "1.68 -> 1.84, 1.87 -> 1.87, 1.89 -> 1.64 s)"
     ),
-    "net_assortativity": (
-        "the _pair_rows stage of _supplier_backbone feeds both the degree "
-        "aggregate and the stub joins of an unpinned backbone; the sibling "
-        "net_* ids pin it with localCheckpoint(eager=False), but a pin here "
-        "has not been measured yet"
-    ),
     "llm_source_overlap": (
         "the per-shingle source count and the join back read the "
         "(source, shingle) projection with different inferred filters, so "
