@@ -10,6 +10,21 @@ TIMESTAMP(NANOS,false), which Spark reads (only) as a long under
 native ns->us truncation bit-for-bit (float division rounds up on some rows
 and diverges by 1 us — verified, FIXTURES.md).
 
+Schemas are read once per table file. ``spark.read.parquet`` infers a
+schema by running a Spark job over the file's footer: loading perfbench's
+``documents`` took 71.7 ms that way against 12.5 ms given its schema
+(medians of 30 alternating loads, 4-core VM), and the gated ``llm_dedup``
+loop loads the same files on every execution. So
+``load_table`` keeps each regular file's inferred schema under
+``(realpath, st_ino, st_mtime_ns, st_size)`` and reads it again with
+``spark.read.schema``: a file rewritten or replaced at the same path
+changes the key and is inferred afresh. The memo keeps at most
+``_SCHEMA_MEMO_MAX`` (64) files, dropping the oldest entry first: a
+process that loads many scratch tables stays bounded. Directories are
+inferred on every load. Inference runs under the confs
+``configure_session`` has just set (``nanosAsLong`` decides ``events.ts``),
+and only file metadata crosses loads: no data, plan or result.
+
 At scale: the tables here are plain parquet directories; on a real cluster
 the same ``register_tables`` points at object-store URIs, and Spark's
 vectorized parquet reader + partition/rowgroup pruning apply unchanged.
@@ -17,9 +32,12 @@ vectorized parquet reader + partition/rowgroup pruning apply unchanged.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 __all__ = [
     "TABLES",
@@ -44,6 +62,10 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# Inferred schemas by table file (see the module docstring), oldest first.
+_SCHEMA_MEMO_MAX = 64
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def configure_session(spark: SparkSession) -> None:
     """Apply the engine's runtime-settable confs to *any* SparkSession.
@@ -59,16 +81,18 @@ def configure_session(spark: SparkSession) -> None:
       away from the UTC-written fixtures (wrong answers, not errors);
     - Arrow + AQE + broadcast threshold — performance posture.
 
-    Static confs (``spark.ui.*``) are deliberately excluded: they cannot be
-    set on a running session and are not correctness-relevant. Idempotent
-    and cheap (a handful of py4j conf.set calls), so every entry point calls
-    it unconditionally.
+    Builder-time confs are skipped, never attempted: non-SQL keys
+    (``spark.ui.*``, driver memory) and the static SQL keys in
+    ``STATIC_SQL_CONF`` (the codegen cache size). A session built without
+    ``get_session`` runs with Spark's value for those. Idempotent and cheap
+    (a handful of py4j conf.set calls), so every entry point calls it
+    unconditionally.
     """
-    from nyuki_spark.session import ENGINE_CONF
+    from nyuki_spark.session import ENGINE_CONF, STATIC_SQL_CONF
 
     for key, value in ENGINE_CONF.items():
-        if not key.startswith("spark.sql."):
-            continue  # static conf — builder-time only
+        if not key.startswith("spark.sql.") or key in STATIC_SQL_CONF:
+            continue  # builder-time only
         try:
             spark.conf.set(key, value)
         except Exception:
@@ -78,11 +102,37 @@ def configure_session(spark: SparkSession) -> None:
             pass
 
 
+def _schema_key(path: str) -> tuple | None:
+    """The memo key of a table file, or None for anything but a regular
+    file (a directory's footers are re-read on every load)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.realpath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, applying type normalisation where needed."""
+    """Load one fixture table, applying type normalisation where needed.
+
+    A table file's schema is inferred once and then passed back with
+    ``spark.read.schema`` (module docstring)."""
     configure_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            if len(_SCHEMAS) >= _SCHEMA_MEMO_MAX:
+                _SCHEMAS.pop(next(iter(_SCHEMAS)))
+            _SCHEMAS[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    if name == "events" and isinstance(schema["ts"].dataType, LongType):
         # ns-as-long -> microsecond timestamp; integer DIV (see module doc).
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
@@ -95,11 +145,11 @@ def register_tables(
 ) -> dict[str, DataFrame]:
     """Register fixture tables as temp views; returns the DataFrames.
 
-    ``spark.read.parquet`` reads footers eagerly, so registration is cheap
-    but NOT free — and a corrupt/unreadable table fails here, at
-    registration. Callers therefore pass only the ``tables`` their query
-    actually references (``Query.run`` infers them), so one bad table
-    cannot poison unrelated queries.
+    The first load of a table file reads its footer eagerly, so
+    registration is cheap but NOT free — and a corrupt/unreadable table
+    fails here, at registration. Callers therefore pass only the
+    ``tables`` their query actually references (``Query.run`` infers
+    them), so one bad table cannot poison unrelated queries.
     """
     configure_session(spark)
     out: dict[str, DataFrame] = {}

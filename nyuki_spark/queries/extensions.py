@@ -1472,7 +1472,7 @@ def _ts_similar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion stages exist only for duplicate-bearing corpora; on
     # dup-free data (the common fixture case) the collapse is 1:1 and the
     # r3 plan — rescore candidates, take 10 — is strictly better.
-    has_dups = groups.where(F.col("m") >= 2).limit(1).count() > 0
+    has_dups = not groups.where(F.col("m") >= 2).isEmpty()
     ga = groups.select(F.col("rep_id").alias("id_a"), F.col("members").alias("_ma"))
     gb = groups.select(F.col("rep_id").alias("id_b"), F.col("members").alias("_mb"))
     intra = (

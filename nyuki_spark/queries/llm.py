@@ -435,7 +435,7 @@ def _cos_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One cheap probe on the cached groups decides the plan: expansion
     # stages only exist for duplicate-bearing corpora; dup-free input gets
     # exactly the r3 plan (collapse is 1:1 there).
-    has_dups = groups.where(F.col("m") >= 2).limit(1).count() > 0
+    has_dups = not groups.where(F.col("m") >= 2).isEmpty()
     cands = embedding_candidates_lsh(uniq, sim_floor=0.35)
     rep_pairs = embedding_neardup_pairs(uniq, candidates=cands)
     if not has_dups:

@@ -27,6 +27,19 @@ see FIXTURES.md):
   also the manager Spark itself falls back to for every store without
   FileContext support. Checkpoint checksums (``<v>.delta.crc``) and
   Hadoop's ``.crc`` files are written as before.
+- ``spark.sql.codegen.cache.maxEntries=1000`` — Spark keeps each
+  whole-stage class it compiles (Janino) in an LRU cache keyed by the
+  generated source, 100 entries by default. One pass of the four
+  ``llm_dedup`` benchmark ids compiles 109 classes in a fresh JVM, so the
+  default cache evicted them within the pass and every later pass
+  recompiled 42-69 of them (counted with ``CodegenMetrics``'
+  compilation-time histogram, 2 task threads, perfbench seed-5 inputs).
+  At 1000 entries a repeat pass compiles none, and perfbench's peak RSS
+  did not move. Only generated code crosses executions: no data, plan or
+  result. It is a static SQL conf
+  (``spark.conf.isModifiable`` is False): the JVM's first session fixes
+  it, so it is set at build time only, and ``STATIC_SQL_CONF`` lists it
+  so that ``catalog.configure_session`` never tries it on a live session.
 
 Scale posture: shuffle partitions default to 32 on local[32] test rigs, but
 the factory honours ``NYUKI_SHUFFLE_PARTITIONS`` so a real cluster deployment
@@ -61,6 +74,22 @@ The archive holds class metadata only: no data, no plans, no results.
   without an archive and never dump again; delete the marker to retry.
   Later runs start with ``-XX:SharedArchiveFile=<archive> -Xshare:auto``;
   a missing, corrupt or stale archive makes the JVM start without it.
+- *A refused archive is rebuilt once.* When the JVM started without
+  mapping the archive (``java.vm.info`` lacks "sharing", as for a corrupt
+  file or an archive copied in from another cache dir), ``get_session``
+  deletes it and leaves ``jvm-<key>.rejected``, so the next run records
+  and dumps a new one. If the JVM refuses that one too, it is deleted and
+  ``jvm-<key>.failed`` stops further builds: at most one rebuild per key.
+  A class list or dump output (``jvm-<key>.jsa.<pid>.classlist`` /
+  ``.tmp``) whose process is dead, left by a building run killed by a
+  signal before its ``atexit``, is removed by the next ``get_session``.
+- *No archive under a launch-time flight recording.* When the driver
+  Java options, ``JAVA_TOOL_OPTIONS`` or ``JDK_JAVA_OPTIONS`` contain
+  ``StartFlightRecording``, no CDS flag is added: JDK 17.0.20 with both
+  dies at start-up with SIGSEGV in
+  ``KlassFactory::check_shared_class_file_load_hook``. ``jcmd <pid>
+  JFR.start`` on a JVM that runs from the archive crashes the same way,
+  so profile with a launch-time recording.
 - *Why the conf-dir redirect is load-bearing.* CDS refuses a non-empty
   directory on the classpath, and Spark puts ``$SPARK_CONF_DIR`` there.
   When that dir holds nothing but ``*.template`` files (it then configures
@@ -75,6 +104,7 @@ The archive holds class metadata only: no data, no plans, no results.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import glob
 import hashlib
 import os
@@ -86,7 +116,7 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "ENGINE_CONF"]
+__all__ = ["get_session", "ENGINE_CONF", "STATIC_SQL_CONF"]
 
 # Configuration shared by every entry point (tests, bench, driver harness).
 ENGINE_CONF: dict[str, str] = {
@@ -108,6 +138,9 @@ ENGINE_CONF: dict[str, str] = {
         "FileSystemBasedCheckpointFileManager"
     ),
     "spark.sql.shuffle.partitions": os.environ.get("NYUKI_SHUFFLE_PARTITIONS", "32"),
+    # Static: a pass of repeated plan shapes outgrows the default 100
+    # (see the module docstring).
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Self-describing UI is useless headless; saves startup time.
     "spark.ui.enabled": "false",
     # Builder-time only (configure_session skips non-spark.sql.* keys): in
@@ -118,6 +151,10 @@ ENGINE_CONF: dict[str, str] = {
     # a real cluster sets executor memory through spark-submit instead.
     "spark.driver.memory": os.environ.get("NYUKI_DRIVER_MEMORY", "24g"),
 }
+
+# The ``spark.sql.*`` keys of ENGINE_CONF that only a session builder can
+# set: Spark raises on a runtime set of a static conf.
+STATIC_SQL_CONF: frozenset[str] = frozenset({"spark.sql.codegen.cache.maxEntries"})
 
 
 def _ship_worker_tuneup() -> None:
@@ -205,11 +242,47 @@ def _only_templates(conf_dir: str) -> bool:
         return True
 
 
-def _class_data_sharing() -> tuple[list[str], _ArchiveBuild | None]:
+def _flight_recording_at_launch(java_opts: str) -> bool:
+    return any(
+        "StartFlightRecording" in opts
+        for opts in (
+            java_opts,
+            os.environ.get("JAVA_TOOL_OPTIONS", ""),
+            os.environ.get("JDK_JAVA_OPTIONS", ""),
+        )
+    )
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # another user's live process
+    return True
+
+
+def _remove_dead_builds(archive: str) -> None:
+    """Remove class lists and dump outputs of building processes that
+    died before their ``atexit`` ran."""
+    for path in glob.glob(f"{glob.escape(archive)}.*"):
+        pid, _, kind = path[len(archive) + 1 :].partition(".")
+        if kind not in ("classlist", "tmp") or not pid.isdigit():
+            continue
+        if not _pid_alive(int(pid)):
+            with contextlib.suppress(OSError):
+                os.remove(path)
+
+
+def _class_data_sharing(java_opts: str) -> tuple[list[str], _ArchiveBuild | None]:
     """Driver JVM options that start from this key's archive, or that
     record the class list which builds it, and the pending build if so.
-    No options when the conf dir holds a real file, the cache dir cannot
-    be written, or this key's dump failed before."""
+    No options when ``java_opts`` or the JVM's environment start a flight
+    recording, the conf dir holds a real file, the cache dir cannot be
+    written, or this key's dump failed before."""
+    if _flight_recording_at_launch(java_opts):
+        return [], None
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     if not _only_templates(conf_dir):
@@ -224,6 +297,7 @@ def _class_data_sharing() -> tuple[list[str], _ArchiveBuild | None]:
     if key is None or os.listdir(empty_conf):
         return [], None
     archive = os.path.join(cache, f"jvm-{key}.jsa")
+    _remove_dead_builds(archive)
     build = None
     if os.path.exists(archive):
         opts = [f"-XX:SharedArchiveFile={archive}", "-Xshare:auto"]
@@ -339,6 +413,24 @@ def _publish(tmp: str, archive: str) -> None:
             _remove(other)
 
 
+def _drop_if_refused(spark: SparkSession, archive: str) -> None:
+    """Delete ``archive`` if the JVM just launched with it did not map it.
+    The first refusal per key leaves ``.rejected`` so that the next run
+    rebuilds; a refusal of the rebuilt archive leaves ``.failed``."""
+    if "sharing" in str(spark.sparkContext._jvm.System.getProperty("java.vm.info")):
+        return
+    rejected = archive[: -len(".jsa")] + ".rejected"
+    try:
+        if os.path.exists(rejected):
+            with open(_ArchiveBuild.marker(archive), "w") as fh:
+                fh.write("the JVM refused the archive again after one rebuild\n")
+        else:
+            open(rejected, "w").close()
+        _remove(archive)
+    except OSError:
+        pass
+
+
 def _remove(path: str) -> None:
     try:
         os.remove(path)
@@ -370,16 +462,22 @@ def get_session(
     if extra_conf:
         conf.update(extra_conf)
     build = None
+    cds_opts: list[str] = []
     # Only a launch of a new JVM can take start-up options.
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        java_opts, build = _class_data_sharing()
         user_opts = conf.get("spark.driver.defaultJavaOptions")
+        cds_opts, build = _class_data_sharing(
+            f"{user_opts or ''} {conf.get('spark.driver.extraJavaOptions', '')}"
+        )
         conf["spark.driver.defaultJavaOptions"] = " ".join(
-            [_JVM_LOG_OPTS, *java_opts, *([user_opts] if user_opts else [])]
+            [_JVM_LOG_OPTS, *cds_opts, *([user_opts] if user_opts else [])]
         )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if build is not None:
         build.attach(spark)
+    for opt in cds_opts:
+        if opt.startswith("-XX:SharedArchiveFile="):
+            _drop_if_refused(spark, opt.split("=", 1)[1])
     return spark

@@ -8,11 +8,14 @@ duplicates, and algebraic properties (idempotence, keep-first choice).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
 from nyuki_spark.catalog import load_table
 from nyuki_spark.operators.dedup import (
+    containment_pairs,
     exact_dedup_keep_first,
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
@@ -172,3 +175,44 @@ def test_simhash_banding_finds_planted_dups(planted):
         (F.col("id_b") - F.col("id_a")) == 1_000_000
     ).count()
     assert planted_found > 0
+
+
+# Word 3-shingles: docs 1/2 share 3 of 5 each (Jaccard 3/7 = 0.428571...,
+# containment 3/5); docs 3/4 share 2 of 3 and 4 (Jaccard 2/5, containment
+# 2/3 = 0.666666...).
+_BOUNDARY_DOCS = [
+    (1, "a b c d e f g"),
+    (2, "c d e f g h i"),
+    (3, "p q r s t"),
+    (4, "p q r s x y"),
+]
+_RATIOS = {
+    ngram_jaccard_pairs: {(1, 2): (3, 7), (3, 4): (2, 5)},
+    containment_pairs: {(1, 2): (3, 5), (3, 4): (2, 3)},
+}
+
+
+@pytest.mark.parametrize(
+    "op, threshold, kept",
+    [
+        # 3/7 rounds HALF_UP to 0.4286 = t although it is below t.
+        (ngram_jaccard_pairs, 0.4286, [(1, 2)]),
+        # 3/7 is 8.6e-6 below t - 0.00005, inside the 1e-4 prefilter band:
+        # the exact round decides, and drops it.
+        (ngram_jaccard_pairs, 0.42863, []),
+        # 2/3 rounds up to 0.6667 = t.
+        (containment_pairs, 0.6667, [(3, 4)]),
+        # 2/3 is 3.3e-6 below t - 0.00005.
+        (containment_pairs, 0.66672, []),
+    ],
+)
+def test_pair_verdict_prefilter_keeps_the_round4_boundary(spark, op, threshold, kept):
+    docs = spark.createDataFrame(_BOUNDARY_DOCS, "doc_id long, text string")
+    got = sorted((r.id_a, r.id_b) for r in op(docs, threshold=threshold).collect())
+    expected = sorted(
+        pair
+        for pair, (num, den) in _RATIOS[op].items()
+        if (Decimal(num) / Decimal(den)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        >= Decimal(str(threshold))
+    )
+    assert got == expected == kept
