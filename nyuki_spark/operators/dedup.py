@@ -331,17 +331,15 @@ def _capped_shared_counts(
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > df_cap)
         .select("shingle")
-        .persist()
+        .localCheckpoint()
     )
-    # One job over the shingle table (map-side partial agg + a LIMIT-1
-    # probe). The persist feeds both join sides below when the funnel
-    # does run.
-    if hot_keys.limit(1).count() == 0:
-        hot_keys.unpersist()
+    # One job over the shingle table (map-side partial agg); the pin
+    # feeds the emptiness probe and both join sides below when the
+    # funnel does run.
+    if hot_keys.isEmpty():
         return _all_shared_counts(sh, id_col)
     if require_lossless:
         hot = hot_keys.limit(5).collect()
-        hot_keys.unpersist()
         raise ValueError(
             f"require_lossless: {len(hot)}+ shingle(s) exceed df_cap="
             f"{df_cap} (e.g. {hot[0]['shingle']!r}); the capped funnel "
@@ -620,9 +618,7 @@ def collapse_text_groups(
     NULL texts are excluded: they carry no simhash/shingles on either
     engine (the oracles' UNNEST emits no token rows), so their
     duplicates must not surface as fabricated pairs. ``groups`` is
-    persisted — the funnel probes it (has_dups) and expands from it;
-    callers run under the bench/driver convention of clearing the cache
-    between query invocations.
+    pinned — the funnel probes it (has_dups) and expands from it.
     """
     groups = (
         docs.where(F.col(text_col).isNotNull())
@@ -632,7 +628,7 @@ def collapse_text_groups(
             F.sort_array(F.collect_list(id_col)).alias("members"),
             F.count(F.lit(1)).alias("m"),
         )
-        .persist()
+        .localCheckpoint()
     )
     uniq = groups.select(F.col("rep_id").alias(id_col), text_col)
     has_dups = not groups.where(F.col("m") >= 2).isEmpty()
@@ -739,17 +735,17 @@ def minhash_band_pairs(
         ).alias(f"m{p}")
         for p in range(n_perm)
     ]
-    # One narrow (id, n_perm bigints) row per doc; both sides of the band
-    # self-join read it — persist so the shingle explode + digest stage
-    # runs once, not once per join side. The cache feeds the RETURNED
-    # lazy DataFrame, so unpersisting here would defeat it; cleanup is
-    # centralized at the sweep surfaces (bench.py / correctness exporter
-    # clear per query, tests/conftest.py per module — r4 ADVICE).
+    # One narrow (id, n_perm bigints) row per doc, read by both sides of
+    # the band self-join. Not pinned: AQE reuses the signature aggregate's
+    # exchange for the second side, so the shingle explode + digest stage
+    # runs once either way (sf0.1, isolated medians over two rounds,
+    # pinned -> unpinned: llm_minhash_neardup 6.96 -> 7.05 and
+    # 6.95 -> 7.06 s, llm_minhash_bandpairs 6.93 -> 6.92 and 6.93 ->
+    # 6.91 s).
     sig = (
         h.groupBy(id_col)
         .agg(*mins)
         .select(id_col, F.array(*[f"m{p}" for p in range(n_perm)]).alias("sig"))
-        .persist()
     )
     banded = sig.select(
         id_col,

@@ -86,7 +86,13 @@ def _supplier_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     with data volume (at sf0.01 the raw supplier graph is already
     complete), so downstream graph algorithms run on the thresholded
     backbone, keeping their joins proportional to strong edges only.
-    Returned columns: u < v, one row per edge."""
+    Returned columns: u < v, one row per edge.
+
+    The edge list is pinned (lazily: the caller's first action fills it).
+    Every graph id reads it from 2+ plan branches (degree table,
+    orientation, wedge join, closing semi-join...), and unpinned each
+    branch replays the lineitem self-join (measured 2.4x on net_triangles
+    at sf0.1)."""
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -158,15 +164,8 @@ def _supplier_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_cnt.crossJoin(F.broadcast(thresh))
         .where(F.col("cnt") >= F.col("t"))
         .select("u", "v")
+        .localCheckpoint(eager=False)
     )
-
-
-# net_triangles / net_common_neighbors localCheckpoint the backbone (its
-# edge list feeds 4+ plan branches), which replaces it with an RDD scan in
-# their final plans — register the pre-checkpoint plan so the registry
-# sweep inspects the hidden stage under the owning query's allowlist.
-SWEEP_INTERMEDIATES["net_triangles"] = _supplier_backbone
-SWEEP_INTERMEDIATES["net_common_neighbors"] = _supplier_backbone
 
 
 # The same CTE prefix, shared by every backbone-graph oracle twin.
@@ -211,16 +210,12 @@ def _triangles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitivity, <= 1); the oriented wedge set only FINDS triangles
     (r5 advice — the oriented count triple-counted the denominator).
     The summary is ONE lazy plan (four 1-row aggregates merged by 1-row
-    broadcast crossJoins) over a lazily-localCheckpoint'd backbone: the
-    edge list — referenced by the degree table, orientation, wedge join,
-    and closing semi-join — materializes once on first action instead of
-    replaying the lineitem self-join per branch (measured 2.4x at
-    sf0.1). The checkpoint hides the backbone's own plan from the final
-    query, so it is registered in ``SWEEP_INTERMEDIATES`` and the
-    registry sweep inspects it separately (r5 advice: no eager/pinned
-    stage may dodge the scale-killer sweep).
+    broadcast crossJoins) over the pinned backbone: the edge list —
+    referenced by the degree table, orientation, wedge join, and closing
+    semi-join — materializes once on first action instead of replaying
+    the lineitem self-join per branch (measured 2.4x at sf0.1).
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     return triangle_summary(backbone)
 
 
@@ -937,14 +932,12 @@ def _common_neighbors_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     THRESHOLDED backbone, and hub salting would bolt on exactly as in
     operators/rank.py if a hub survived thresholding.
 
-    One lazy plan over a lazily-localCheckpoint'd backbone (r5 advice:
-    the old eager collect+createDataFrame hid the plan from the registry
-    sweep): the edge list materializes once on first action and feeds
-    the wedge/anti/degree fan-out; the backbone's own pre-checkpoint
-    plan is registered in ``SWEEP_INTERMEDIATES`` so the sweep still
-    inspects it.
+    One lazy plan over the pinned backbone (r5 advice: the old eager
+    collect+createDataFrame hid the plan from the registry sweep): the
+    edge list materializes once on first action and feeds the
+    wedge/anti/degree fan-out.
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1338,11 +1331,8 @@ def _kcore_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     references round r TWICE (degree aggregate + restriction), so an
     unpinned chain re-evaluates every earlier round per reference —
     2^rounds subtree growth (measured 20 s at sf0.01; pinned: ~2 s).
-    One representative un-pinned round is registered in
-    ``SWEEP_INTERMEDIATES`` so the plan sweep still inspects the
-    per-round operators.
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1365,27 +1355,6 @@ def _kcore_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("u")
     )
 
-
-def _kcore_one_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One un-pinned peel round over the raw backbone — the plan shape
-    every round repeats, exposed for the registry sweep."""
-    backbone = _supplier_backbone(spark, sf_dir)
-    und = backbone.unionByName(
-        backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    kthr = deg.agg(F.expr("percentile(deg, 0.5)").alias("k"))
-    keep = (
-        deg.crossJoin(F.broadcast(kthr))
-        .where(F.col("deg") >= F.col("k"))
-        .select("u")
-    )
-    return und.join(keep, "u", "semi").join(
-        keep.select(F.col("u").alias("v")), "v", "semi"
-    )
-
-
-SWEEP_INTERMEDIATES["net_kcore"] = _kcore_one_round
 
 register(
     "net_kcore",
@@ -1908,12 +1877,12 @@ def _assortativity_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: degrees are one key aggregate on the edge list; each
     symmetric stub joins its two endpoint degrees by key; CORR is a
     single-pass partial-aggregable moment. Everything is bounded by the
-    thresholded edge list, which is pinned with localCheckpoint: the
+    thresholded edge list, which ``_supplier_backbone`` pins: the
     degree aggregate and the stub joins both read it, and unpinned its
     _pair_rows stage ran twice (sf0.1, unpinned -> pinned, four rounds:
     4.75 -> 2.13, 3.94 -> 1.90, 4.06 -> 2.31, 3.50 -> 1.93 s).
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1930,9 +1899,6 @@ def _assortativity_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) / 2).cast("long").alias("n_edges"),
         F.round(F.corr("du", "dv"), 6).cast("double").alias("assortativity"),
     )
-
-
-SWEEP_INTERMEDIATES["net_assortativity"] = _supplier_backbone
 
 
 register(
@@ -2949,9 +2915,9 @@ def _degree_dist_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree — the first diagnostic of any co-occurrence graph (hub
     detection, power-law sanity, orientation-bound checks for the
     triangle counter). Degree table is one partial aggregate over the
-    (localCheckpoint-pinned) edge list; the distribution is a second
+    (pinned) edge list; the distribution is a second
     ~|distinct degrees|-key aggregate."""
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -2962,8 +2928,6 @@ def _degree_dist_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("deg")
     )
 
-
-SWEEP_INTERMEDIATES["net_degree_dist"] = _supplier_backbone
 
 register(
     "net_degree_dist",
@@ -3152,7 +3116,7 @@ def _adamic_adar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines sum doubles in arbitrary order but terms are O(1) counts of
     magnitude ~1, so the 6-dp pin is far above the fp noise floor.
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -3216,8 +3180,6 @@ register(
         "known edges, TakeOrdered top-20"
     ),
 )
-
-SWEEP_INTERMEDIATES["net_adamic_adar"] = _supplier_backbone
 
 
 # -- Mann-Kendall trend test (round 8) ------------------------------------------
@@ -3721,7 +3683,7 @@ def _local_clustering_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats until the pinned ratio. Nodes of degree < 2 are excluded
     (lcc undefined).
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     und = backbone.unionByName(
         backbone.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -3785,8 +3747,6 @@ register(
         "triangle/degree counts to the pinned ratio"
     ),
 )
-
-SWEEP_INTERMEDIATES["net_local_clustering"] = _supplier_backbone
 
 
 # -- Wilcoxon signed-rank test (round 8) ------------------------------------------
@@ -3934,7 +3894,7 @@ def _modularity_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     last 'ALL' row, so the hash check covers every intermediate, not
     just the scalar.
     """
-    backbone = _supplier_backbone(spark, sf_dir).localCheckpoint(eager=False)
+    backbone = _supplier_backbone(spark, sf_dir)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"), F.col("s_nationkey").alias("c")
     )
@@ -4010,8 +3970,6 @@ register(
         "pinned per-community terms + global Q"
     ),
 )
-
-SWEEP_INTERMEDIATES["net_modularity"] = _supplier_backbone
 
 
 # -- digit-law audit (round 9) --------------------------

@@ -678,7 +678,7 @@ def _decontam_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("bench_members"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     uniq = groups.select(F.col("rep_id").alias("doc_id"), "text")
     grams = word_ngrams(uniq, n=5)
@@ -1139,9 +1139,8 @@ def _bpe_fn(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     ``k`` is configurable (r7 next-round #6): cost is one vocab-sized
     aggregate + one 1-row argmax collect per merge, linear in k (probe
     table at k=16/sf0.1 in BASELINE.md r8). The chained REPLACE lineage
-    over the persisted vocab is re-pinned with localCheckpoint every 6
-    steps so neither the plan tree nor the codegen expression depth
-    grows with k.
+    over the pinned vocab is re-pinned every 6 steps so neither the plan
+    tree nor the codegen expression depth grows with k.
     """
     docs = load_table(spark, sf_dir, "documents")
     words = (
@@ -1153,7 +1152,7 @@ def _bpe_fn(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
     seq = words.select(
         F.regexp_replace("w", "(.)", "<$1>").alias("seq"), "f"
-    ).persist()
+    ).localCheckpoint()
     merges = []
     for step in range(1, k + 1):
         syms = seq.select(

@@ -1427,9 +1427,9 @@ def _ts_similar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("user_id").alias("rep_id"),
         F.slice(F.sort_array(F.collect_list("user_id")), 1, 11).alias("members"),
         F.count(F.lit(1)).alias("m"),
-    ).persist()  # entity-sized; feeds 6 plan branches (pa/pb/ga/gb/intra/
-    # LSH) — without the cache each branch re-runs the events aggregation
-    # (observed 2.6x at sf0.1). Bench/driver clear caches between queries.
+    ).localCheckpoint()  # entity-sized; feeds 6 plan branches (pa/pb/ga/
+    # gb/intra/LSH) — without the pin each branch re-runs the events
+    # aggregation (observed 2.6x at sf0.1).
     prof = groups.select(F.col("rep_id").alias("user_id"), "v")
 
     # Pair generation goes through LSH bucketing (equi-join on hash keys),
@@ -1468,7 +1468,7 @@ def _ts_similar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
-    # One cheap probe on the cached groups table decides the plan: the
+    # One cheap probe on the pinned groups table decides the plan: the
     # expansion stages exist only for duplicate-bearing corpora; on
     # dup-free data (the common fixture case) the collapse is 1:1 and the
     # r3 plan — rescore candidates, take 10 — is strictly better.
@@ -1530,7 +1530,7 @@ def _ts_similar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(10)
         )
 
-    top = _score(cand).persist()
+    top = _score(cand).localCheckpoint()
     # Recall guard (ADVICE r3): LSH recall is probabilistic. The oracle is
     # an exact all-pairs top-10, so a bucket miss — or a true top-10 pair
     # below the sim_floor=0.5 candidate cutoff — would silently hash-fail
@@ -1540,12 +1540,11 @@ def _ts_similar_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the floor (meaning true pairs may hide below it), fall back to the
     # exact pair join — safe because the profile table is entity-sized
     # (|users| rows), not event-sized. The 10-row collect is the guard's
-    # only driver-side cost; ``persist`` keeps the LSH tier single-pass
+    # only driver-side cost; the pin keeps the LSH tier single-pass
     # when the guard passes (the common case).
     rows = top.collect()
     eps = 0.05
     if len(rows) < 10 or min(r["cos"] for r in rows) < 0.5 + eps:
-        top.unpersist()
         # Exact fallback pairs UNIQUE profiles (the collapse holds), so the
         # theta join is bounded by distinct-profile count, not user count.
         exact = pa.join(pb, F.col("id_a") < F.col("id_b"))
@@ -2069,9 +2068,9 @@ def _pagerank_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         # Edge-list-sized; referenced by the degree table and by every
-        # iteration's contribution join — persist so the orders x lineitem
+        # iteration's contribution join — pin it so the orders x lineitem
         # distinct isn't replayed once per reference.
-        .persist()
+        .localCheckpoint()
     )
     edges = e1.unionByName(
         e1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -2193,11 +2192,11 @@ def _stream_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_foreach_batch(sdf, fold, f"{scratch}/ckpt")
         index = spark.read.parquet(state["path"])
-        # Narrow (id, fp, sh) rows, read by both verdict tiers — persist
+        # Narrow (id, fp, sh) rows, read by both verdict tiers — pinned
         # so the corpus is sketched once in the verdict pass, not twice.
         base = docs.select(
             "doc_id", F.md5("text").alias("fp"), simhash60("text").alias("sh")
-        ).persist()
+        ).localCheckpoint(eager=False)
         exact = (
             base.join(
                 index.groupBy("fp").agg(F.min("mid").alias("mid")), "fp"
@@ -3951,9 +3950,9 @@ def _cbo_join_reorder_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"JOIN {names['nation']} n ON c.c_nationkey = n.n_nationkey\n"
             f"WHERE n.n_regionkey <= 1\n"
             f"GROUP BY n.n_name ORDER BY n.n_name"
-        ).cache()
-        res.count()  # materialize under CBO confs, before restore/drop
-        return res
+        )
+        # Materialize under CBO confs, before restore/drop.
+        return res.localCheckpoint()
     finally:
         for k, v in saved.items():
             if v is None:

@@ -37,7 +37,6 @@ from nyuki_spark.operators.dedup import (
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
-    simhash_sketches,
 )
 from nyuki_spark.operators.kmeans import kmeans_assign
 from nyuki_spark.operators.similarity import knn_cosine_lsh
@@ -257,36 +256,6 @@ def _text_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _reps_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shingle table that ngram_jaccard_pairs / containment_pairs pin
-    with localCheckpoint, as built before the pin — registered in
-    SWEEP_INTERMEDIATES so the plan sweep still sees the shingle stage."""
-    return word_ngrams(_text_reps(spark, sf_dir), n=3)
-
-
-def _collapsed_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`_reps_shingle_stage` for the ids whose representatives come
-    from collapse_text_groups (llm_ngram_jaccard, llm_dedup_eval)."""
-    _, uniq, _ = collapse_text_groups(load_table(spark, sf_dir, "documents"))
-    return word_ngrams(uniq, n=3)
-
-
-def _docs_shingle_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-pin shingle table of llm_shingle_novelty (word_ngrams over
-    every document)."""
-    return word_ngrams(load_table(spark, sf_dir, "documents"), n=3)
-
-
-SWEEP_INTERMEDIATES["llm_ngram_jaccard"] = _collapsed_shingle_stage
-# Wins over the simhash sketch builder for llm_dedup_eval (see
-# _collapsed_simhash_stage).
-SWEEP_INTERMEDIATES["llm_dedup_eval"] = _collapsed_shingle_stage
-SWEEP_INTERMEDIATES["llm_ngram_jaccard_capped"] = _reps_shingle_stage
-SWEEP_INTERMEDIATES["llm_subset_containment"] = _reps_shingle_stage
-SWEEP_INTERMEDIATES["llm_subset_containment_capped"] = _reps_shingle_stage
-SWEEP_INTERMEDIATES["llm_shingle_novelty"] = _docs_shingle_stage
-
-
 def _jaccard_fn(
     spark: SparkSession,
     sf_dir: str,
@@ -429,10 +398,10 @@ def _cos_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.sort_array(F.collect_list("vec_id")), 1, 11).alias("members"),
             F.count(F.lit(1)).alias("m"),
         )
-        .persist()  # entity-sized; feeds uniq/ga/gb/intra plan branches
+        .localCheckpoint()  # entity-sized; feeds uniq/ga/gb/intra plan branches
     )
     uniq = groups.select(F.col("rep_id").alias("vec_id"), "embedding")
-    # One cheap probe on the cached groups decides the plan: expansion
+    # One cheap probe on the pinned groups decides the plan: expansion
     # stages only exist for duplicate-bearing corpora; dup-free input gets
     # exactly the r3 plan (collapse is 1:1 there).
     has_dups = not groups.where(F.col("m") >= 2).isEmpty()
@@ -1477,42 +1446,6 @@ register(
 )
 
 
-def _collapsed_simhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketch table that simhash_pairs pins with localCheckpoint, as
-    built before the pin over the duplicate-collapsed documents —
-    registered in SWEEP_INTERMEDIATES so the plan sweep still sees the
-    simhash stage."""
-    _, uniq, _ = collapse_text_groups(load_table(spark, sf_dir, "documents"))
-    return simhash_sketches(uniq)
-
-
-def _pipeline_simhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`_collapsed_simhash_stage` over llm_pipeline_e2e's
-    quality-kept documents."""
-    kept = _quality_kept(load_table(spark, sf_dir, "documents"))
-    _, uniq, _ = collapse_text_groups(kept)
-    return simhash_sketches(uniq)
-
-
-SWEEP_INTERMEDIATES.update(
-    dict.fromkeys(
-        (
-            "llm_simhash_pairs",
-            "llm_neardup_clusters",
-            "llm_dedup_groups",
-            "llm_survivor_pick",
-            "llm_leakage_safe_split",
-        ),
-        _collapsed_simhash_stage,
-    )
-)
-SWEEP_INTERMEDIATES["llm_pipeline_e2e"] = _pipeline_simhash_stage
-# llm_dedup_eval pins the same sketch table (through _simhash_pairs_fn),
-# but the sweep takes one builder per id: it keeps _collapsed_shingle_stage,
-# and its sketch stage, over the same collapsed documents, is swept under
-# llm_simhash_pairs.
-
-
 # -- portable MinHash (round 4b) ---------------------------------------------
 
 # DuckDB twins of functions.text.gram_hashes / minhash_from_grams over
@@ -2466,8 +2399,7 @@ register(
 
 def _char_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(doc, char bigram) counts (doc_id, bg, cnt, c1) of
-    llm_perplexity_proxy, as built before its localCheckpoint pin — also
-    registered in SWEEP_INTERMEDIATES for the plan sweep."""
+    llm_perplexity_proxy, as built before its localCheckpoint pin."""
     docs = load_table(spark, sf_dir, "documents")
 
     from pyspark.sql.types import (
@@ -2597,8 +2529,6 @@ register(
         "broadcast onto a linear bigram explode"
     ),
 )
-
-SWEEP_INTERMEDIATES["llm_perplexity_proxy"] = _char_bigram_counts
 
 
 # -- int8 scalar quantization round trip (round 5) ----------------------------
@@ -3395,7 +3325,7 @@ def _semdedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reps_src = groups.select(
         F.col("rep").alias("vec_id"), "embedding"
-    ).persist()
+    ).localCheckpoint()
     k = max(8, -(-reps_src.count() // SEMDEDUP_ROWS_PER_CELL))
     asg = kmeans_assign(reps_src, k=k, iters=2)
     emb_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))

@@ -1,4 +1,27 @@
-"""Query registry plumbing (see ``nyuki_spark.queries``)."""
+"""Query registry plumbing (see ``nyuki_spark.queries``).
+
+**The pin rule.** An engine function that reads an intermediate more than
+once pins it, and the only pin is ``DataFrame.localCheckpoint``:
+
+- The pin's lifetime is the DataFrame's. Its blocks are released when the
+  pinned frame (and every frame built on it) becomes unreachable, so
+  nothing a query pins outlives the query, and no caller has to clear
+  Spark's cache after the engine. ``persist()``/``cache()`` are not
+  used: they register the plan in Spark's CacheManager, which holds it
+  until someone clears it.
+- It is eager (``localCheckpoint()``) when the function itself runs an
+  action on the pinned frame before it returns (a ``has_dups``/
+  ``isEmpty``/``count`` probe, a per-step ``collect``) or removes the
+  frame's inputs before it returns (a dropped table, a deleted scratch
+  dir), and lazy (``localCheckpoint(eager=False)``) otherwise: the first
+  job that reads it fills it.
+- A local checkpoint gives up lineage: its blocks live only in the
+  executors' block managers, so a lost executor fails the job instead of
+  recomputing the lost partitions.
+
+A pin is kept only where an isolated A/B shows it saving time, or where
+the result must outlive its inputs.
+"""
 
 from __future__ import annotations
 
@@ -12,13 +35,13 @@ from nyuki_spark.catalog import TABLES, configure_session, register_tables
 
 __all__ = ["Query", "REGISTRY", "register", "SWEEP_INTERMEDIATES"]
 
-# qid -> (spark, sf_dir) -> DataFrame: plan fragments that a query
-# materializes behind a localCheckpoint/persist barrier (so the final
-# plan shows only a scan) — exposed here so the registry plan sweep can
-# inspect the HIDDEN stage's physical plan too (r5 advice: eager
-# engine_fns must not dodge the scale-killer sweep). Each entry is the
-# builder for the pre-barrier DataFrame; the sweep applies the owning
-# query's allowlist to it.
+# qid -> (spark, sf_dir) -> DataFrame: plan fragments that a query runs
+# but that reach neither its returned frame nor a pin — a driver-side loop
+# that collects each step, or a stage written to disk and read back — so
+# the registry plan sweep can inspect them too (r5 advice: eager
+# engine_fns must not dodge the scale-killer sweep). The sweep records
+# every pinned frame's plan itself; a pin needs no entry here. The sweep
+# applies the owning query's allowlist to each builder's plan.
 SWEEP_INTERMEDIATES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 

@@ -20,7 +20,7 @@ The live-query contract (:func:`run_live`, used by every ``*_live`` id):
 - *Pin rule.* The result is pinned with ``localCheckpoint(eager=True)``
   before the scratch dir goes: it truncates lineage to executor blocks
   with no file dependency. A ``cache()`` is not enough — once evicted
-  (or ``clearCache()``), a recount re-reads files that no longer exist.
+  or cleared, a recount re-reads files that no longer exist.
 - *Views.* :func:`run_to_table` drops its own memory-sink view before it
   returns; the returned DataFrame still reads the sink. Callers neither
   name sinks nor drop views.

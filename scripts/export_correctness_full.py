@@ -107,10 +107,6 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — report, don't die
             row["err"] = f"{type(exc).__name__}: {exc}"[:400]
         report[qid] = row
-        # Several operators persist() intermediates that feed the returned
-        # lazy DataFrame; cleanup is centralized at sweep surfaces (r4
-        # ADVICE) — here, per query, mirroring bench.py.
-        spark.catalog.clearCache()
         status = "ok" if row["hash_match"] else ("ERR" if row["err"] else "MISMATCH")
         print(f"  {qid:32s} {status}", flush=True)
 

@@ -167,14 +167,33 @@ def main() -> None:
         "headline subset, each annotated with the property it demonstrates.",
         "",
     ]
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from nyuki_spark.queries.registry import SWEEP_INTERMEDIATES
+
+    # A pinned frame (localCheckpoint) is an RDD scan in the plan that
+    # reads it; record each pinned frame so its own plan is shown too.
+    pinned: list = []
+    pin = DataFrame.localCheckpoint
+
+    def recording_pin(self, *args, **kwargs):
+        pinned.append(self)
+        return pin(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording_pin
+
+    def explain(df) -> str:
+        return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        ).rstrip()
 
     for qid, note in HEADLINES.items():
         q = REGISTRY[qid]
+        pinned.clear()
         # Queries that materialize driver-side (iterative argmax loops)
-        # or hide stages behind persisted artifacts register their real
-        # data-sized plan as a sweep intermediate — show THAT plan, not
-        # the k-row literal the query returns.
+        # or write stages to disk register their real data-sized plan as
+        # a sweep intermediate — show THAT plan, not the k-row literal
+        # the query returns.
         inter = SWEEP_INTERMEDIATES.get(qid)
         if inter is not None:
             df = inter(spark, sf_dir)
@@ -185,17 +204,15 @@ def main() -> None:
 
             register_tables(spark, sf_dir)
             df = spark.sql(q.engine_sql)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
         out.append(f"## {qid}")
         out.append("")
         out.append(f"**Scale property:** {note}")
         out.append("")
-        out.append("```")
-        out.append(plan.rstrip())
-        out.append("```")
-        out.append("")
+        out.extend(["```", explain(df), "```", ""])
+        for i, p in enumerate(pinned, 1):
+            out.append(f"Pinned stage {i} of {len(pinned)}:")
+            out.append("")
+            out.extend(["```", explain(p), "```", ""])
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(out))

@@ -75,20 +75,3 @@ def pytest_collection_modifyitems(config, items):
             isinstance(v, str) and ("_live" in v) for v in cs.params.values()
         ):
             item.add_marker(skip)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _unpersist_between_modules():
-    """Bound cached-block accumulation across registry sweeps (r4 ADVICE):
-    several operators persist() intermediates that feed the RETURNED lazy
-    DataFrame (collapse_text_groups, minhash_band_pairs, net_pagerank),
-    so they cannot unpersist before the caller collects. Cleanup is
-    therefore centralized at the sweep surfaces: bench.py clears per
-    extension query, the correctness exporter clears per query, and the
-    test suite clears per module here."""
-    yield
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        s.catalog.clearCache()

@@ -42,7 +42,6 @@ def test_repeat_pass_of_llm_dedup_ids_reuses_compiled_code(spark, sf_dir):
         before = _compiles(spark)
         for qid in LLM_DEDUP_IDS:
             REGISTRY[qid].run(spark, sf_dir).collect()
-            spark.catalog.clearCache()
         per_pass.append(_compiles(spark) - before)
     assert per_pass[0] > 0
     assert per_pass[1] <= 4, per_pass

@@ -9,6 +9,10 @@ partial-aggregate scalar collect, deliberately-scoped verification pass).
 The allowlist is checked for staleness — an entry whose query no longer
 trips the sweep must be removed, so the list can only shrink.
 
+A pinned stage (``localCheckpoint``) is an RDD scan in the plan that reads
+it, so the sweep also records the physical plan of every frame pinned while
+the query is built and inspects it under the owning id's allowlist.
+
 A second sweep checks intra-query reuse: no Python node (a stage that runs
 user code in Python workers) may appear twice in one query's plan over the
 same input, because each copy runs the Python stage again. Repeats that
@@ -18,10 +22,13 @@ staleness rule.
 
 from __future__ import annotations
 
+import gc
 import re
+import time
 from collections import Counter
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 from nyuki_spark.queries import REGISTRY
 from nyuki_spark.queries.registry import SWEEP_INTERMEDIATES
@@ -68,7 +75,8 @@ def _iter_plan_nodes(jplan):
     the string format changes across Spark versions; class names and the
     TreeNode children API are the stable surface). Descends through AQE
     wrappers (current plan of AdaptiveSparkPlanExec, materialized plan of
-    QueryStageExec), reused exchanges, and subquery expression plans.
+    QueryStageExec), reused exchanges, and subquery expression plans. A
+    pinned frame is a leaf here; its plan comes from :func:`pinned_plans`.
     """
     stack = [jplan]
     while stack:
@@ -83,14 +91,6 @@ def _iter_plan_nodes(jplan):
             continue
         if cls == "ReusedExchangeExec":
             stack.append(n.child())
-            continue
-        if cls == "InMemoryTableScanExec":
-            # A persist() marks the subtree as an InMemoryRelation whose
-            # plan is NOT a child of the scan node — descend explicitly,
-            # or every cached stage (minhash signatures, dup-collapse
-            # groups, pagerank edge lists) becomes a sweep blind spot
-            # (r5 advice: no pinned stage may dodge the sweep).
-            stack.append(n.relation().cachedPlan())
             continue
         stack.extend(_child_plans(n))
 
@@ -489,6 +489,14 @@ ALLOWLIST: dict[str, tuple[tuple[str, ...], str]] = {
         "rows (explicit-broadcast scalar shape, stat_psi_drift "
         "precedent)",
     ),
+    "scan_partition_pruning": (
+        ("Exchange SinglePartition",),
+        "the census over the pruned partition is a global aggregate with "
+        "a COUNT(DISTINCT): the distinct keys shuffle by user_id, and the "
+        "SinglePartition exchange moves one merged partial row per "
+        "partition (a keyless aggregate below it, in mixed merge/partial "
+        "mode, so the Partial-only exemption does not see it)",
+    ),
     "llm_vocab_coverage": (
         ("Exchange OneGroupConstant", "BroadcastNestedLoopJoin"),
         "two global_running_sum prefix sums over the frequency-of-"
@@ -500,15 +508,40 @@ ALLOWLIST: dict[str, tuple[tuple[str, ...], str]] = {
 }
 
 
+@pytest.fixture
+def pinned_plans(monkeypatch) -> list:
+    """Physical plans of the frames pinned while the test runs, in pin
+    order. A pin is an RDD scan in the plan that reads it; recording the
+    pinned frame's own plan keeps its stage in view (r5 advice: no pinned
+    stage may dodge the sweep)."""
+    plans: list = []
+    pin = DataFrame.localCheckpoint
+
+    def recording_pin(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan())
+        return pin(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_pin)
+    return plans
+
+
 @pytest.mark.parametrize("qid", sorted(REGISTRY))
-def test_no_scale_killers(qid, spark, sf_dir):
+def test_no_scale_killers(qid, spark, sf_dir, pinned_plans):
+    spark.catalog.clearCache()
     df = REGISTRY[qid].run(spark, sf_dir)
+    # Nothing a query pins outlives it: pins are localCheckpoints, never
+    # CacheManager entries that only clearCache() releases.
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{qid}: left a relation in Spark's CacheManager (persist/cache); "
+        f"pin with localCheckpoint instead"
+    )
     jplan = df._jdf.queryExecution().executedPlan()
     found = _found_patterns(jplan)
-    # Stages a query pins behind a localCheckpoint (an RDD scan in the
-    # final plan) are swept via their registered pre-barrier builder —
-    # the barrier must not create a blind spot (r5 advice), and the
-    # owning query's allowlist covers both plans.
+    for pinned in pinned_plans:
+        found |= _found_patterns(pinned)
+    # Plans the query runs that reach neither the returned frame nor a
+    # pin (driver-side loops, on-disk artifacts) come from their
+    # registered builder.
     inter_fn = SWEEP_INTERMEDIATES.get(qid)
     if inter_fn is not None:
         inter_plan = inter_fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
@@ -557,10 +590,14 @@ def _python_node_repeats(jplan) -> list[str]:
     Walks the INITIAL plan of every AdaptiveSparkPlanExec: the final plan
     depends on runtime sizes (at a small scale AQE broadcasts one side and
     shows one copy), the initial plan does not. A ReusedExchange leaf is
-    not descended (it reads the exchange it reuses), and a persisted
-    relation's plan is walked once, however many scans read it.
+    not descended (it reads the exchange it reuses), and a pinned frame is
+    a leaf (an RDD scan), read once however many scans read the pin.
+
+    The plans behind pins are not walked: an initial plan repeats every
+    exchange it reads twice, and AQE reuses such an exchange only at run
+    time (the backbone's pair-count stage, read by the threshold and by
+    the join, runs its Python stage once).
     """
-    seen_cached: set[str] = set()
     subtrees: list[str] = []
     stack = [jplan]
     while stack:
@@ -573,13 +610,6 @@ def _python_node_repeats(jplan) -> list[str]:
             stack.append(n.plan())
             continue
         if cls == "ReusedExchangeExec":
-            continue
-        if cls == "InMemoryTableScanExec":
-            cached = n.relation().cachedPlan()
-            key = _PLAN_IDS.sub("", cached.treeString())
-            if key not in seen_cached:
-                seen_cached.add(key)
-                stack.append(cached)
             continue
         if _PY_NODE.search(cls):
             subtrees.append(_PLAN_IDS.sub("", n.treeString()))
@@ -620,3 +650,42 @@ def test_no_python_node_repeats(qid, spark, sf_dir):
         f"shared input at the consumer (localCheckpoint) or allowlist it "
         f"with a reason. First:\n{repeats[0][:1200]}"
     )
+
+
+# -- pins are released with their DataFrame ----------------------------------
+
+
+def _pinned_since(spark, first_id: int) -> int:
+    """RDDs with an id of at least ``first_id`` that hold blocks. Read
+    through RDDInfo, which keeps no reference to its RDD: the map that
+    ``getPersistentRDDs()`` returns holds every RDD in it until py4j
+    releases the map's proxy, so polling that map keeps the pins alive."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(1 for info in infos if info.id() >= first_id)
+
+
+@pytest.mark.parametrize(
+    "qid", ["net_pagerank", "ts_similar_users", "llm_cosine_pairs"]
+)
+def test_pins_released_when_frame_is_dropped(qid, spark, sf_dir):
+    """The blocks an id pins go once its result frame is unreachable:
+    after a collect, a drop and a GC on both sides of the gateway, no RDD
+    the query created still holds blocks (aim 3: nothing the engine holds
+    outlives the query). The poll is bounded but long: the context
+    cleaner unpersists only after a JVM GC finds the RDD unreachable, and
+    py4j releases the query's JVM objects on one finalizer thread, behind
+    every proxy that earlier tests dropped."""
+    first_id = spark.sparkContext.emptyRDD().id() + 1
+    df = REGISTRY[qid].run(spark, sf_dir)
+    df.collect()
+    assert _pinned_since(spark, first_id) > 0
+    del df
+    deadline = time.monotonic() + 300
+    while True:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        held = _pinned_since(spark, first_id)
+        if held == 0 or time.monotonic() > deadline:
+            break
+        time.sleep(1)
+    assert held == 0, f"{qid}: {held} pinned RDD(s) outlived the frame"
