@@ -316,10 +316,11 @@ def _jaccard_capped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the realistic pipeline order, and what keeps identical texts from
     ever reaching the shingle join. The oracle replicates the capped
     nomination + full verification literally, so the cap semantics
-    (not just the happy path) are hash-verified. Scale probe:
-    scripts/shingle_skew_probe.py injects a 10^4x-duplicated
-    boilerplate prefix and shows flat capped cost vs quadratic
-    uncapped candidate growth (table in BASELINE.md §r7).
+    (not just the happy path) are hash-verified. The cap's bound and
+    its losslessness below the cap are tier-1 tests
+    (``tests/test_dedup.py::test_jaccard_df_cap_*``); BASELINE.md §r7
+    keeps the historical 10^4x-boilerplate table (flat capped cost vs
+    quadratic uncapped candidate growth).
     """
     uniq = _text_reps(spark, sf_dir)
     return ngram_jaccard_pairs(uniq, threshold=0.5, n=3, df_cap=50).orderBy(
@@ -3206,8 +3207,9 @@ def _containment_capped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle shared by k docs now contributes at most C(50, 2) nominated
     pairs instead of C(k, 2); the oracle replicates the capped nomination
     + full-set verification literally so the cap semantics are
-    hash-verified, and scripts/shingle_skew_probe.py asserts the capped
-    funnel flat (and output-identical) at 10^4x boilerplate duplication.
+    hash-verified. The shared cap is tier-1 tested on the Jaccard tier
+    (``tests/test_dedup.py::test_jaccard_df_cap_*``); BASELINE.md §r7
+    keeps the historical 10^4x-boilerplate measurement of this funnel.
     """
     uniq = _text_reps(spark, sf_dir)
     return containment_pairs(uniq, threshold=0.8, n=3, df_cap=50).orderBy(
@@ -3303,10 +3305,10 @@ def _semdedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     n x k distance folds for rows that can never pair. Both the rep
     collapse and the k formula are derived identically by the oracle
     (scalar-subquery LIMIT), so the parameterization is hash-verified —
-    at the graded SFs k resolves to 8; scripts/semdedup_scale_probe.py
-    scales a synthetic distinct corpus through 10x/30x and shows the
-    within-cell pair stage growing linearly (rows_per_cell bounded)
-    where fixed k=8 grows quadratically. Assignment is n_reps x k
+    at the graded SFs k resolves to 8. BASELINE.md keeps the historical
+    10x/30x synthetic-corpus measurement: the within-cell pair stage
+    grew linearly (rows_per_cell bounded) where fixed k=8 grew
+    quadratically. Assignment is n_reps x k
     map-only distance folds (no shuffle); at extreme scale that product
     is capped by a two-level coarse/fine quantizer — documented, not
     needed at probed SFs.

@@ -52,44 +52,54 @@ memory and is mostly 10-50% slower).
 Driver start-up from a class-data-sharing archive
 -------------------------------------------------
 A fresh driver JVM loads ~14k Spark/Hadoop classes from 287 jars before the
-first query can run: about half of process-start-to-first-result (~10 s
-without an archive, ~5 s with one, on a 4-core VM). When ``get_session``
-launches the JVM it passes, through ``spark.driver.defaultJavaOptions``
-(Spark puts it before ``extraJavaOptions``, so a caller's heap flags still
-apply), a JDK 17 AppCDS archive of the classes an engine session loads.
-The archive holds class metadata only: no data, no plans, no results.
+first query can run: about half of process-start-to-first-result (~2.9 s
+to ``getOrCreate`` without an archive, ~1.6 s with one, on a 4-core VM).
+When ``get_session`` launches the JVM it passes, through
+``spark.driver.defaultJavaOptions`` (Spark puts it before
+``extraJavaOptions``, so a caller's heap flags still apply), a JDK 17
+dynamic class-data-sharing archive of the classes an engine session
+loads, layered over the JDK's own base archive. The archive holds class
+metadata only: no data, no plans, no results.
 
 - *Where and how big.* ``$XDG_CACHE_HOME/nyuki_spark`` (default
-  ``~/.cache/nyuki_spark``), one ``jvm-<key>.jsa`` of ~160-230 MB. The key
-  hashes the JDK (``java.home`` and its ``release`` file) and the Spark jar
-  list (names, sizes, mtimes; the JVM itself rejects an archive whose jars
-  changed). Publishing a key's archive deletes the archives of other keys.
-- *How it is built.* A run that finds no archive records its loaded classes
-  (``-XX:DumpLoadedClassList``, 0.5-0.7 s slower). At interpreter exit, once
-  that JVM has exited, one ``java -Xshare:dump`` (30-60 s, output in
-  ``jvm-<key>.dump.log``) turns the list into the archive, with exactly the
-  classpath and module flags read from the live JVM, and publishes it by
-  rename (test processes run concurrently). A dump that fails or passes
-  ``_DUMP_TIMEOUT_S`` leaves ``jvm-<key>.failed``, and later runs start
-  without an archive and never dump again; delete the marker to retry.
-  Later runs start with ``-XX:SharedArchiveFile=<archive> -Xshare:auto``;
-  a missing, corrupt or stale archive makes the JVM start without it.
-- *A refused archive is rebuilt once.* When the JVM started without
-  mapping the archive (``java.vm.info`` lacks "sharing", as for a corrupt
-  file or an archive copied in from another cache dir), ``get_session``
-  deletes it and leaves ``jvm-<key>.rejected``, so the next run records
-  and dumps a new one. If the JVM refuses that one too, it is deleted and
-  ``jvm-<key>.failed`` stops further builds: at most one rebuild per key.
-  A class list or dump output (``jvm-<key>.jsa.<pid>.classlist`` /
-  ``.tmp``) whose process is dead, left by a building run killed by a
-  signal before its ``atexit``, is removed by the next ``get_session``.
-- *No archive under a launch-time flight recording.* When the driver
-  Java options, ``JAVA_TOOL_OPTIONS`` or ``JDK_JAVA_OPTIONS`` contain
-  ``StartFlightRecording``, no CDS flag is added: JDK 17.0.20 with both
-  dies at start-up with SIGSEGV in
-  ``KlassFactory::check_shared_class_file_load_hook``. ``jcmd <pid>
-  JFR.start`` on a JVM that runs from the archive crashes the same way,
-  so profile with a launch-time recording.
+  ``~/.cache/nyuki_spark``), one ``driver-<key>.jsa`` of ~140-185 MB. The
+  key hashes the JDK (``java.home`` and its ``release`` file) and the
+  Spark jar list (names, sizes, mtimes; the JVM itself rejects an archive
+  whose jars changed). Publishing a key's archive deletes the
+  ``driver-*.jsa`` archives of other keys. Files of other names in that
+  dir, such as the static ``jvm-<key>.jsa`` archives of earlier versions,
+  are neither read nor deleted.
+- *How it is built.* The JVM of a run that finds no archive writes one
+  itself when it exits (``-XX:ArchiveClassesAtExit=<archive>.<pid>.tmp``;
+  ``getOrCreate`` and the first query are ~1.5 s slower, the exit ~5 s).
+  Its ~600 per-class ``[cds]`` skip warnings are turned off; ``[cds]``
+  errors still reach stderr. At interpreter exit ``get_session``'s hook
+  stops the JVM if the program left it running, waits for it to exit,
+  and publishes the file by rename (test processes run concurrently). A
+  JVM that exits non-zero or without the file leaves
+  ``driver-<key>.failed``, and later runs start without an archive and
+  never build again; delete the marker to retry. A JVM still running
+  after ``_JVM_EXIT_TIMEOUT_S`` is killed, its partial file removed and
+  the marker left. Later runs start with
+  ``-XX:SharedArchiveFile=<archive> -Xshare:auto``; a missing, corrupt or
+  stale archive makes the JVM start without it.
+- *A refused archive is rebuilt once.* Right after the launch,
+  ``get_session`` reads the driver JVM's ``/proc/<pid>/maps``: an archive
+  the JVM mapped is listed there. One that is not (a corrupt file, or an
+  archive recorded over another classpath, which HotSpot refuses with
+  ``[cds,dynamic] Unable to use shared archive``) is deleted, leaving
+  ``driver-<key>.rejected``, so the next run builds a new one. If the JVM
+  refuses that one too, it is deleted and ``driver-<key>.failed`` stops
+  further builds: at most one rebuild per key. Where there is no
+  ``/proc``, the check cannot tell and keeps the archive. A dump output
+  (``driver-<key>.jsa.<pid>.tmp``) whose process is dead, left by a
+  building run killed by a signal before its ``atexit``, is removed by
+  the next ``get_session``.
+- *Flight recordings.* JFR works with the archive, started at launch
+  (``-XX:StartFlightRecording``) or on a live JVM (``jcmd <pid>
+  JFR.start``). In the one run that builds the archive, the JDK turns
+  off a launch-time recording ("JFR will be disabled during CDS
+  dumping", on stderr); ``jcmd JFR.start`` still records there.
 - *Why the conf-dir redirect is load-bearing.* CDS refuses a non-empty
   directory on the classpath, and Spark puts ``$SPARK_CONF_DIR`` there.
   When that dir holds nothing but ``*.template`` files (it then configures
@@ -182,23 +192,9 @@ def _ship_worker_tuneup() -> None:
 
 # HotSpot logs warnings on stdout by default; send them to stderr.
 _JVM_LOG_OPTS = "-Xlog:disable -Xlog:all=warning:stderr"
-# JVM input arguments that shape the module graph: the archive dump
-# repeats the live JVM's exactly.
-_MODULE_OPTS = (
-    "--add-modules",
-    "--add-opens",
-    "--add-exports",
-    "--add-reads",
-    "--enable-native-access",
-    "--limit-modules",
-    "--patch-module",
-    "--module-path",
-    "--upgrade-module-path",
-)
-# Bounds on the at-exit archive build: the building run's JVM exit, then
-# the dump (30-60 s on a 4-core VM).
+# Bound on a building run's JVM exit, which includes writing the archive
+# (~5 s on a 4-core VM).
 _JVM_EXIT_TIMEOUT_S = 60.0
-_DUMP_TIMEOUT_S = 300.0
 
 
 def _cache_dir() -> str:
@@ -242,17 +238,6 @@ def _only_templates(conf_dir: str) -> bool:
         return True
 
 
-def _flight_recording_at_launch(java_opts: str) -> bool:
-    return any(
-        "StartFlightRecording" in opts
-        for opts in (
-            java_opts,
-            os.environ.get("JAVA_TOOL_OPTIONS", ""),
-            os.environ.get("JDK_JAVA_OPTIONS", ""),
-        )
-    )
-
-
 def _pid_alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -264,25 +249,20 @@ def _pid_alive(pid: int) -> bool:
 
 
 def _remove_dead_builds(archive: str) -> None:
-    """Remove class lists and dump outputs of building processes that
-    died before their ``atexit`` ran."""
-    for path in glob.glob(f"{glob.escape(archive)}.*"):
-        pid, _, kind = path[len(archive) + 1 :].partition(".")
-        if kind not in ("classlist", "tmp") or not pid.isdigit():
-            continue
-        if not _pid_alive(int(pid)):
+    """Remove dump outputs of building processes that died before their
+    ``atexit`` ran."""
+    for path in glob.glob(f"{glob.escape(archive)}.*.tmp"):
+        pid = path[len(archive) + 1 : -len(".tmp")]
+        if pid.isdigit() and not _pid_alive(int(pid)):
             with contextlib.suppress(OSError):
                 os.remove(path)
 
 
-def _class_data_sharing(java_opts: str) -> tuple[list[str], _ArchiveBuild | None]:
+def _class_data_sharing() -> tuple[list[str], _ArchiveBuild | None]:
     """Driver JVM options that start from this key's archive, or that
-    record the class list which builds it, and the pending build if so.
-    No options when ``java_opts`` or the JVM's environment start a flight
-    recording, the conf dir holds a real file, the cache dir cannot be
-    written, or this key's dump failed before."""
-    if _flight_recording_at_launch(java_opts):
-        return [], None
+    write it at exit, and the pending build if so. No options when the
+    conf dir holds a real file, the cache dir cannot be written, or this
+    key's build failed before."""
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     if not _only_templates(conf_dir):
@@ -296,7 +276,7 @@ def _class_data_sharing(java_opts: str) -> tuple[list[str], _ArchiveBuild | None
         return [], None
     if key is None or os.listdir(empty_conf):
         return [], None
-    archive = os.path.join(cache, f"jvm-{key}.jsa")
+    archive = os.path.join(cache, f"driver-{key}.jsa")
     _remove_dead_builds(archive)
     build = None
     if os.path.exists(archive):
@@ -305,23 +285,22 @@ def _class_data_sharing(java_opts: str) -> tuple[list[str], _ArchiveBuild | None
         return [], None
     else:
         build = _ArchiveBuild(archive)
-        opts = [f"-XX:DumpLoadedClassList={build.classlist}"]
+        # The dump's per-class skip warnings would fill stderr; keep errors.
+        opts = [f"-XX:ArchiveClassesAtExit={build.tmp}", "-Xlog:cds=error:stderr"]
     os.environ["SPARK_CONF_DIR"] = empty_conf
     return opts, build
 
 
 class _ArchiveBuild:
-    """A run that records its class list. At interpreter exit, once the
-    JVM has exited, it dumps the archive from that list and publishes it
-    by rename, or leaves the key's failure marker."""
+    """A run whose JVM writes the archive as it exits. At interpreter
+    exit, once that JVM has exited, the archive is published by rename,
+    or the key's failure marker is left."""
 
-    pending = False  # at most one recording JVM per process
+    pending = False  # at most one building JVM per process
 
     def __init__(self, archive: str):
         self.archive = archive
-        self.classlist = f"{archive}.{os.getpid()}.classlist"
         self.tmp = f"{archive}.{os.getpid()}.tmp"
-        self.command: list[str] | None = None
         self.proc = None
         _ArchiveBuild.pending = True
 
@@ -329,34 +308,14 @@ class _ArchiveBuild:
     def marker(archive: str) -> str:
         return archive[: -len(".jsa")] + ".failed"
 
-    def attach(self, spark: SparkSession) -> None:
-        """Read the dump's command line from the live JVM and schedule the
-        dump; the archive must match its classpath and module flags."""
-        jvm = spark.sparkContext._jvm
-        args = list(
-            jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
-        )
+    def attach(self) -> None:
         self.proc = getattr(SparkContext._gateway, "proc", None)
-        if f"-XX:DumpLoadedClassList={self.classlist}" not in args or self.proc is None:
-            _remove(self.classlist)
-            return
-        modules = [a for a in args if a.split("=", 1)[0] in _MODULE_OPTS]
-        self.command = [
-            os.path.join(jvm.System.getProperty("java.home"), "bin", "java"),
-            "-Xshare:dump",
-            f"-XX:SharedClassListFile={self.classlist}",
-            f"-XX:SharedArchiveFile={self.tmp}",
-            "-cp",
-            jvm.System.getProperty("java.class.path"),
-            *modules,
-        ]
-        atexit.register(self.run)
+        if self.proc is not None:
+            atexit.register(self.run)
 
     def run(self) -> None:
         try:
-            if not self._jvm_exited():
-                return
-            failure = self._dump()
+            failure = self._wait_for_jvm_exit()
             if failure is None:
                 _publish(self.tmp, self.archive)
             else:
@@ -366,11 +325,11 @@ class _ArchiveBuild:
             pass
         finally:
             _remove(self.tmp)
-            _remove(self.classlist)
 
-    def _jvm_exited(self) -> bool:
-        """Stop the recording JVM if the program left it running: the
-        class list is complete only once it has exited."""
+    def _wait_for_jvm_exit(self) -> str | None:
+        """Stop the building JVM if the program left it running and wait
+        for its exit, which writes the archive; None once the archive is
+        complete, else why it is not."""
         if self.proc.poll() is None:
             # Still running, so it is the process's current gateway JVM.
             sc = SparkContext._active_spark_context
@@ -384,41 +343,35 @@ class _ArchiveBuild:
             try:
                 self.proc.wait(timeout=_JVM_EXIT_TIMEOUT_S)
             except subprocess.TimeoutExpired:
-                return False
-        return True
-
-    def _dump(self) -> str | None:
-        """Run the dump; None on success, else why it failed."""
-        log = self.archive[: -len(".jsa")] + ".dump.log"
-        with open(log, "w") as out:
-            try:
-                rc = subprocess.run(
-                    self.command,
-                    stdin=subprocess.DEVNULL,
-                    stdout=out,
-                    stderr=subprocess.STDOUT,
-                    timeout=_DUMP_TIMEOUT_S,
-                ).returncode
-            except subprocess.TimeoutExpired:
-                return f"dump timed out after {_DUMP_TIMEOUT_S:g} s"
-        return None if rc == 0 else f"dump exited {rc}; see {log}"
+                self.proc.kill()
+                self.proc.wait()
+                return f"the JVM did not exit within {_JVM_EXIT_TIMEOUT_S:g} s"
+        if self.proc.returncode != 0 or not os.path.exists(self.tmp):
+            return f"the JVM exited {self.proc.returncode} without an archive"
+        return None
 
 
 def _publish(tmp: str, archive: str) -> None:
     """Rename ``tmp`` onto ``archive`` and delete other keys' archives:
     one archive per cache dir."""
     os.replace(tmp, archive)
-    for other in glob.glob(os.path.join(os.path.dirname(archive), "jvm-*.jsa")):
+    for other in glob.glob(os.path.join(os.path.dirname(archive), "driver-*.jsa")):
         if other != archive:
             _remove(other)
 
 
 def _drop_if_refused(spark: SparkSession, archive: str) -> None:
-    """Delete ``archive`` if the JVM just launched with it did not map it.
-    The first refusal per key leaves ``.rejected`` so that the next run
+    """Delete ``archive`` if the JVM just launched with it did not map it
+    (a mapped archive is listed in the JVM's ``/proc/<pid>/maps``; the
+    JDK's base archive maps either way). The first refusal per key leaves ``.rejected`` so that the next run
     rebuilds; a refusal of the rebuilt archive leaves ``.failed``."""
-    if "sharing" in str(spark.sparkContext._jvm.System.getProperty("java.vm.info")):
-        return
+    pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            if os.path.realpath(archive) in fh.read():
+                return
+    except OSError:
+        return  # no /proc: cannot tell, so keep it
     rejected = archive[: -len(".jsa")] + ".rejected"
     try:
         if os.path.exists(rejected):
@@ -466,9 +419,7 @@ def get_session(
     # Only a launch of a new JVM can take start-up options.
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         user_opts = conf.get("spark.driver.defaultJavaOptions")
-        cds_opts, build = _class_data_sharing(
-            f"{user_opts or ''} {conf.get('spark.driver.extraJavaOptions', '')}"
-        )
+        cds_opts, build = _class_data_sharing()
         conf["spark.driver.defaultJavaOptions"] = " ".join(
             [_JVM_LOG_OPTS, *cds_opts, *([user_opts] if user_opts else [])]
         )
@@ -476,7 +427,7 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if build is not None:
-        build.attach(spark)
+        build.attach()
     for opt in cds_opts:
         if opt.startswith("-XX:SharedArchiveFile="):
             _drop_if_refused(spark, opt.split("=", 1)[1])

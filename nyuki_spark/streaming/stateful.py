@@ -37,7 +37,6 @@ from pyspark.sql.types import (
 __all__ = [
     "funnel_match",
     "join_branches_with_timeout",
-    "join_branches_tws",
     "sleep_release",
 ]
 
@@ -121,115 +120,6 @@ def join_branches_with_timeout(
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def join_branches_tws(
-    sdf: DataFrame,
-    n_branches: int,
-    key_col: str = "instance_id",
-    branch_col: str = "branch",
-    payload_col: str = "payload",
-    timeout_ms: int = 30_000,
-) -> DataFrame:
-    """:func:`join_branches_with_timeout` on the transformWithState API.
-
-    Spark 4's ``transformWithStateInPandas`` succeeds
-    ``applyInPandasWithState``: typed state slots (ValueState/ListState/
-    MapState), explicit per-key timers instead of one group timeout, state
-    schema evolution, and first-class RocksDB backing. Semantics are
-    identical to the legacy form (asserted side by side in
-    tests/test_streaming_stateful.py when the runtime dep is present) —
-    keep both until the legacy API is retired.
-
-    Runtime requirement: the transformWithState state protocol speaks
-    protobuf between the JVM state server and the Python worker, so the
-    ``protobuf`` package must be importable on driver AND executors. Where
-    it isn't (this test container), we raise immediately with a pointer to
-    :func:`join_branches_with_timeout`, which has the same semantics on the
-    older state API and no extra deps.
-    """
-    try:
-        import google.protobuf  # noqa: F401  (needed by the TWS state protocol)
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package on "
-            "driver and executors; it is not installed. Use "
-            "join_branches_with_timeout (applyInPandasWithState) instead — "
-            "identical semantics, no protobuf dependency."
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("branches", ArrayType(StringType())),
-            StructField("payloads", ArrayType(StringType())),
-            StructField("complete", BooleanType()),
-        ]
-    )
-
-    # Defined in-function so cloudpickle ships the class by value (workers
-    # can't import this repo when the driver runs from elsewhere).
-    class JoinBranches(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._acc = handle.getValueState(
-                "acc", "branches array<string>, payloads array<string>"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._acc.get() if self._acc.exists() else None
-            branches, payloads = (list(got[0]), list(got[1])) if got else ([], [])
-            first_arrival = got is None
-            for pdf in rows:
-                for b, p in zip(pdf[branch_col], pdf[payload_col]):
-                    b = str(b)
-                    if b not in branches:
-                        branches.append(b)
-                        payloads.append(str(p))
-            if len(branches) >= n_branches:
-                self._acc.clear()
-                yield pd.DataFrame(
-                    {
-                        key_col: [key[0]],
-                        "branches": [sorted(branches)],
-                        "payloads": [payloads],
-                        "complete": [True],
-                    }
-                )
-            else:
-                self._acc.update((branches, payloads))
-                if first_arrival:
-                    self._handle.registerTimer(
-                        timerValues.getCurrentProcessingTimeInMs() + timeout_ms
-                    )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # A completed key cleared its state; its stale timer emits nothing.
-            if self._acc.exists():
-                branches, payloads = self._acc.get()
-                self._acc.clear()
-                yield pd.DataFrame(
-                    {
-                        key_col: [key[0]],
-                        "branches": [list(branches)],
-                        "payloads": [list(payloads)],
-                        "complete": [False],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=JoinBranches(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime",
     )
 
 

@@ -107,78 +107,6 @@ def test_join_timeout_emits_partial(spark, tmp_path):
             "state_rows_dropped_by_watermark"} <= set(mdf.columns)
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-# transformWithStateInPandas speaks protobuf to the JVM state server; without
-# the package the driver worker crashes before init(). The container lacks it,
-# so these two tests document intended behavior for a real cluster.
-needs_protobuf = pytest.mark.skipif(
-    not _has_protobuf(), reason="transformWithState requires the protobuf package"
-)
-
-
-def test_join_branches_tws_missing_dep_raises_clearly(spark, tmp_path):
-    """Without protobuf, fail fast at call time (not deep in a stream crash)."""
-    if _has_protobuf():
-        pytest.skip("protobuf present; covered by the live tests below")
-    from nyuki_spark.streaming.stateful import join_branches_tws
-
-    sdf = _stream_from_rows(
-        spark, tmp_path, [Row(instance_id=1, branch="a", payload="x")], SCHEMA
-    )
-    with pytest.raises(ImportError, match="join_branches_with_timeout"):
-        join_branches_tws(sdf, n_branches=2)
-
-
-@needs_protobuf
-def test_join_branches_tws_complete_path(spark, tmp_path):
-    """transformWithState variant: identical semantics to the legacy API."""
-    from nyuki_spark.streaming.stateful import join_branches_tws
-
-    rows = [
-        Row(instance_id=1, branch="a", payload="p1a"),
-        Row(instance_id=1, branch="b", payload="p1b"),
-        Row(instance_id=2, branch="a", payload="p2a"),  # incomplete, parked
-    ]
-    sdf = _stream_from_rows(spark, tmp_path, rows, SCHEMA)
-    out = run_to_table(
-        join_branches_tws(sdf, n_branches=2, timeout_ms=600_000), mode="append"
-    )
-    got = {r.instance_id: r for r in out.collect()}
-    assert set(got) == {1}
-    assert got[1].complete is True and got[1].branches == ["a", "b"]
-
-
-@needs_protobuf
-def test_join_branches_tws_timeout_partial(spark, tmp_path):
-    from nyuki_spark.streaming.stateful import join_branches_tws
-
-    rows = [Row(instance_id=7, branch="a", payload="p7a")]
-    sdf = _stream_from_rows(spark, tmp_path, rows, SCHEMA)
-    name = f"tws_to_{uuid.uuid4().hex[:8]}"
-    q = (
-        join_branches_tws(sdf, n_branches=2, timeout_ms=1_500)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        got = _poll_table(spark, name, min_rows=1)
-    finally:
-        q.stop()
-    assert len(got) == 1
-    assert got[0].complete is False and got[0].branches == ["a"]
-
-
 def test_sleep_release_after_delay(spark, tmp_path):
     rows = [Row(event_id=11, payload="wake-me")]
     sdf = _stream_from_rows(spark, tmp_path, rows, "event_id long, payload string")
