@@ -262,27 +262,42 @@ def simhash60(text_col: Column | str, sep: str = " ") -> Column:
     return _simhash_vote_udf()(hashes)
 
 
-def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle) rows.
+def word_ngrams(
+    df: DataFrame,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    with_size: bool = False,
+) -> DataFrame:
+    """Distinct word n-gram shingles per input row: (id, shingle) rows,
+    plus ``ns`` (that row's distinct-shingle count, bigint) when
+    ``with_size=True``.
 
     The shingle set is the input to Jaccard / MinHash dedup — the most
     widely shared stage of the dedup family (jaccard/containment funnels,
     decontamination, source overlap, shingle novelty, bigram counts).
+    Tokens are the pieces of ``text`` split on the single space byte
+    (so doubled, leading and trailing spaces give empty tokens, as
+    ``split(text, ' ')`` does); a shingle is ``n`` consecutive tokens
+    joined by one space, i.e. the exact original character span. NULL
+    text and texts with fewer than ``n`` tokens emit nothing.
 
-    r13 (guide §4.2 — the substring_spans playbook): the former shape was
-    a sequence+transform HOF (interpreted per gram, with O(n) element_at
-    concats each) exploded and then GLOBALLY de-duplicated by a
-    (id, shingle) exchange. Now a `mapInPandas` stage emits the identical
-    shingle set with zero string joins: tokens joined by the single-space
-    separator reconstruct the exact original character span, so each
-    shingle is a slice of the original text between separator positions
-    (found with one numpy pass over the UTF-8 bytes — the space byte
-    never occurs inside a multibyte sequence); per-doc set-dedup makes
-    the (id, shingle) rows distinct BY CONSTRUCTION, so the downstream
-    distinct exchange is gone from every consumer. Order of rows within a
-    doc is unspecified, as before (every consumer aggregates or joins).
+    One ``mapInArrow`` stage does the whole batch with pyarrow kernels,
+    with no per-document Python loop: ``split_pattern`` tokenizes,
+    ``list_flatten`` lays every token of the batch end to end, and
+    ``binary_join_element_wise`` over ``n`` shifted slices of that flat
+    array builds every window at once; windows that cross a row boundary
+    are dropped, and a ``group_by`` on (row position, shingle) makes the
+    rows distinct per input ROW (two rows with the same id are not merged,
+    as the former per-document loop did not merge them). The (id,
+    shingle) rows are distinct by construction, so no consumer needs a
+    distinct exchange. ``ns`` comes from the same pass (a bincount of the
+    distinct rows), so a consumer that needs set sizes carries them on
+    every shingle row instead of aggregating the table again. Order of
+    rows within a document is unspecified (every consumer aggregates or
+    joins).
 
-    The output ends in the ``mapInPandas`` with no exchange after it, so
+    The output ends in the ``mapInArrow`` with no exchange after it, so
     ReusedExchange cannot share it: every reference re-runs the scan and
     the Python stage. A consumer that reads the table more than once pins
     it with ``localCheckpoint()`` (operators/dedup.py pair operators,
@@ -292,47 +307,59 @@ def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str
     their pins did not win at sf0.1 (tests/test_plan_registry_sweep.py
     PY_REPEAT_ALLOWLIST).
     """
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [StructField(id_col, id_type), StructField("shingle", StringType())]
-    )
+    fields = [
+        StructField(id_col, df.schema[id_col].dataType),
+        StructField("shingle", StringType()),
+    ]
+    if with_size:
+        fields.append(StructField("ns", LongType()))
 
-    def _shingle_rows(batches):
+    def _shingle_batches(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        for pdf in batches:
-            out_id, out_sh = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                tb = text.encode("utf-8")
-                seps = np.where(np.frombuffer(tb, dtype=np.uint8) == 32)[0]
-                n_tok = seps.size + 1
-                if n_tok < n:
-                    continue
-                starts = np.empty(n_tok, dtype=np.int64)
-                ends = np.empty(n_tok, dtype=np.int64)
-                starts[0] = 0
-                starts[1:] = seps + 1
-                ends[:-1] = seps
-                ends[-1] = len(tb)
-                uniq = {
-                    tb[starts[i] : ends[i + n - 1]]
-                    for i in range(n_tok - n + 1)
-                }
-                out_sh.extend(s.decode("utf-8") for s in uniq)
-                out_id.extend([did] * len(uniq))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(out_id),
-                    "shingle": pd.Series(out_sh, dtype=object),
-                }
+        for batch in batches:
+            toks = pc.split_pattern(batch.column(1), " ")
+            n_tok = (
+                pc.list_value_length(toks)
+                .fill_null(0)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
             )
+            # Window k of the flat token array starts at token k; it is a
+            # shingle when its n tokens all belong to k's row.
+            m = int(n_tok.sum()) - n + 1
+            if m <= 0:
+                continue
+            row = np.repeat(np.arange(n_tok.size), n_tok)[:m]
+            first = np.cumsum(n_tok) - n_tok
+            inside = np.flatnonzero(np.arange(m) - first[row] + n <= n_tok[row])
+            flat = pc.list_flatten(toks)
+            grams = pc.binary_join_element_wise(
+                *[flat.slice(j, m) for j in range(n)], " "
+            ).take(pa.array(inside))
+            uniq = (
+                pa.table({"r": row[inside], "shingle": grams})
+                .group_by(["r", "shingle"])
+                .aggregate([])
+            )
+            r = uniq.column("r").to_numpy()
+            cols = {
+                id_col: batch.column(0).take(pa.array(r)),
+                "shingle": uniq.column("shingle").combine_chunks(),
+            }
+            if with_size:
+                cols["ns"] = pa.array(
+                    np.bincount(r, minlength=n_tok.size)[r], type=pa.int64()
+                )
+            yield pa.RecordBatch.from_pydict(cols)
 
-    return df.select(id_col, text_col).mapInPandas(_shingle_rows, out_schema)
+    return df.select(id_col, text_col).mapInArrow(
+        _shingle_batches, StructType(fields)
+    )
 
 
 # PII redaction rules: (tag, pattern, replacement), applied IN ORDER.

@@ -225,16 +225,19 @@ def minhash_neardup_pairs(
 
 
 def _pair_shared_counts(
-    pairs: DataFrame, sh: DataFrame, id_col: str
+    pairs: DataFrame, sh: DataFrame, id_col: str, length_ok=None
 ) -> DataFrame:
     """Exact |shingles(a) ∩ shingles(b)| for an explicit candidate-pair
-    list: (id_a, id_b, shared).
+    list: (id_a, id_b, na, nb, shared), where ``sh`` is a
+    ``word_ngrams(..., with_size=True)`` table and na/nb are the two
+    documents' shingle counts it carries.
 
     Cost is |pairs| x shingles-per-doc — proportional to the candidate
     list, never to per-shingle pair fanout. Pairs with an empty
     intersection drop out (inner join), which is fine for every caller:
     thresholds are > 0. This is the verification stage of the funnel; the
-    shingle self-join only ever has to NOMINATE pairs.
+    shingle self-join only ever has to NOMINATE pairs. ``length_ok(na,
+    nb)``, when given, drops pairs whose sizes alone rule them out.
 
     The candidate list is normalized first (r7 advice): pairs are swapped
     to id_a < id_b, self-pairs dropped, and duplicates collapsed — an
@@ -251,55 +254,63 @@ def _pair_shared_counts(
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    return (
-        norm.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
+    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle", F.col("ns").alias("na"))
+    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle", F.col("ns").alias("nb"))
+    joined = norm.join(sh_a, "id_a").join(sh_b, ["id_b", "shingle"])
+    if length_ok is not None:
+        joined = joined.where(length_ok(F.col("na"), F.col("nb")))
+    return joined.groupBy("id_a", "id_b", "na", "nb").agg(
+        F.count(F.lit(1)).alias("shared")
     )
 
 
-def _all_shared_counts(sh: DataFrame, id_col: str) -> DataFrame:
-    """Plain exact shingle self-join: (id_a, id_b, shared) over ALL pairs
-    sharing >= 1 shingle. The uncapped ground-truth form — quadratic in
-    per-shingle document frequency, so callers at scale go through
-    :func:`_capped_shared_counts` unless the corpus is known skew-free.
+def _self_join_counts(
+    sh: DataFrame, id_col: str, length_ok=None, name: str = "shared"
+) -> DataFrame:
+    """Shingle self-join: (id_a, id_b, na, nb, <name>) over ALL pairs
+    sharing >= 1 shingle of ``sh``. The sizes ride along as group keys
+    (they are functions of the ids), so no size aggregate or size join
+    is needed downstream; ``length_ok(na, nb)`` joins into the join
+    condition. Quadratic in per-shingle document frequency, so callers at
+    scale go through :func:`_capped_shared_counts` unless the corpus is
+    known skew-free.
     """
     a, b = sh.alias("a"), sh.alias("b")
+    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
+    if length_ok is not None:
+        cond = cond & length_ok(F.col("a.ns"), F.col("b.ns"))
     return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, cond)
         .groupBy(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.ns").alias("na"),
+            F.col("b.ns").alias("nb"),
         )
-        .agg(F.count(F.lit(1)).alias("shared"))
+        .agg(F.count(F.lit(1)).alias(name))
     )
 
 
 def _capped_shared_counts(
     sh: DataFrame,
-    sizes: DataFrame,
     id_col: str,
     df_cap: int,
     bound_pred,
+    length_ok=None,
     require_lossless: bool = False,
 ) -> DataFrame:
     """df-capped nomination + lossless upper-bound prefilter + exact hot
-    verification: (id_a, id_b, shared), exact for every pair surviving
-    ``bound_pred``.
+    verification: (id_a, id_b, na, nb, shared), exact for every pair
+    surviving ``bound_pred``.
 
     Shared by every set-overlap metric that is MONOTONE in ``shared``
     (Jaccard, containment, overlap coefficient, Dice): nomination runs the
     shingle self-join on cold shingles only (document frequency <= df_cap,
     bounding per-shingle fanout at C(df_cap, 2)); a pair's true shared
     count is at most s_cold + min(hot_a, hot_b) (it cannot share more hot
-    shingles than either side HAS), so ``bound_pred(_smax, _na, _nb)`` —
+    shingles than either side HAS), so ``bound_pred(_smax, na, nb)`` —
     the metric's threshold test evaluated at that upper bound — discards
     pairs losslessly before the exact hot-intersection count runs on the
     few survivors. A true pair is missed only when EVERY shared shingle is
@@ -311,7 +322,7 @@ def _capped_shared_counts(
     job. When NO shingle exceeds ``df_cap`` — every shingle is cold — the
     capped funnel is the plain self-join plus pure overhead (hot/cold
     split, bound prefilter, hot verification of an empty set), so this
-    falls through to :func:`_all_shared_counts`, which is identical by
+    falls through to :func:`_self_join_counts`, which is identical by
     definition. Under skew (census non-empty) the capped stages run
     exactly as before.
 
@@ -331,13 +342,13 @@ def _capped_shared_counts(
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > df_cap)
         .select("shingle")
-        .localCheckpoint()
     )
-    # One job over the shingle table (map-side partial agg); the pin
-    # feeds the emptiness probe and both join sides below when the
-    # funnel does run.
+    # Not pinned: the emptiness probe is the census's only read on a
+    # skew-free corpus (one job over the pinned shingle table, map-side
+    # partial agg), and pinning it first cost a job of its own. Only the
+    # skewed branch below reads the census again.
     if hot_keys.isEmpty():
-        return _all_shared_counts(sh, id_col)
+        return _self_join_counts(sh, id_col, length_ok)
     if require_lossless:
         hot = hot_keys.limit(5).collect()
         raise ValueError(
@@ -349,28 +360,12 @@ def _capped_shared_counts(
         )
     cold = sh.join(hot_keys, "shingle", "left_anti")
     hot = sh.join(hot_keys, "shingle", "left_semi")
-    a, b = cold.alias("a"), cold.alias("b")
-    s_cold = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("s_cold"))
-    )
+    s_cold = _self_join_counts(cold, id_col, length_ok, "s_cold")
     hcnt = hot.groupBy(id_col).agg(F.count(F.lit(1)).alias("h"))
     ha = hcnt.select(F.col(id_col).alias("id_a"), F.col("h").alias("ha"))
     hb = hcnt.select(F.col(id_col).alias("id_b"), F.col("h").alias("hb"))
-    na_ = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("_na"))
-    nb_ = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("_nb"))
     bounded = (
-        s_cold.join(na_, "id_a")
-        .join(nb_, "id_b")
-        .join(ha, "id_a", "left")
+        s_cold.join(ha, "id_a", "left")
         .join(hb, "id_b", "left")
         .withColumn(
             "_smax",
@@ -380,17 +375,65 @@ def _capped_shared_counts(
                 F.coalesce(F.col("hb"), F.lit(0)),
             ),
         )
-        .where(bound_pred(F.col("_smax"), F.col("_na"), F.col("_nb")))
-        .select("id_a", "id_b", "s_cold")
+        .where(bound_pred(F.col("_smax"), F.col("na"), F.col("nb")))
+        .select("id_a", "id_b", "na", "nb", "s_cold")
     )
-    hot_shared = _pair_shared_counts(bounded, hot, id_col).withColumnRenamed(
-        "shared", "s_hot"
+    hot_shared = _pair_shared_counts(bounded, hot, id_col).select(
+        "id_a", "id_b", F.col("shared").alias("s_hot")
     )
     return bounded.join(hot_shared, ["id_a", "id_b"], "left").select(
         "id_a",
         "id_b",
+        "na",
+        "nb",
         (F.col("s_cold") + F.coalesce(F.col("s_hot"), F.lit(0))).alias("shared"),
     )
+
+
+def _shared_counts(
+    df: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    candidates: DataFrame | None,
+    df_cap: int | None,
+    require_lossless: bool,
+    bound_pred,
+    length_ok=None,
+) -> DataFrame:
+    """(id_a, id_b, na, nb, shared) through the branch the arguments pick:
+    ``candidates`` verification, the ``df_cap`` funnel, or the plain
+    self-join. Every branch carries each document's shingle count ``ns``
+    from :func:`word_ngrams` on its shingle rows, so no branch aggregates
+    the shingle table for sizes."""
+    # Pinned: every branch reads the shingle table at least twice (both
+    # sides of the self-join or of the pair verification; the capped
+    # funnel's census probe first). word_ngrams ends in a mapInArrow with
+    # no exchange after it, so each read would re-run the scan and the
+    # Python stage — ReusedExchange has nothing to share, and a
+    # repartition tail does not help either: the optimizer pushes
+    # different inferred isnotnull filters below it per consumer, so the
+    # subtrees stop matching. r12's A/B against this pin (llm_ngram_jaccard
+    # 2.12 -> 2.37 s) predates the Python-stage rewrite, when the table
+    # still ended in a distinct exchange that ReusedExchange shared. With
+    # the pin, isolated sf0.1 medians over two rounds (unpinned ->
+    # pinned): llm_subset_containment_capped 5.05/5.47 -> 4.43/4.46 s,
+    # llm_dedup_eval 7.69/8.09 -> 6.53/6.27 s.
+    sh = word_ngrams(
+        df, n=n, id_col=id_col, text_col=text_col, with_size=True
+    ).localCheckpoint()
+    if candidates is not None:
+        return _pair_shared_counts(candidates, sh, id_col, length_ok)
+    if df_cap is not None:
+        return _capped_shared_counts(
+            sh,
+            id_col,
+            df_cap,
+            bound_pred,
+            length_ok,
+            require_lossless=require_lossless,
+        )
+    return _self_join_counts(sh, id_col, length_ok)
 
 
 def ngram_jaccard_pairs(
@@ -431,50 +474,33 @@ def ngram_jaccard_pairs(
         overlap is viral boilerplate — exactly the pairs a dedup pipeline
         does not want. Uncapped (default) behavior is byte-identical to
         the exact oracle.
+
+    Every branch also drops pairs by size alone: Jaccard is at most
+    min(na, nb) / max(na, nb), so a pair whose size ratio is below
+    ``threshold - 5e-5`` (the 5e-5 covers the final round-4 boundary, see
+    :func:`_round_verdict`) cannot be kept. The test runs on the joined
+    shingle rows, before a pair's shared count is aggregated.
     """
-    # Pinned: every branch below reads the shingle table at least twice
-    # (sizes + shared counts; the capped funnel adds the hot-key census and
-    # the hot/cold splits). word_ngrams ends in a mapInPandas with no
-    # exchange after it, so each read would re-run the scan and the Python
-    # stage — ReusedExchange has nothing to share, and a repartition tail
-    # does not help either: the optimizer pushes different inferred
-    # isnotnull filters below it per consumer, so the subtrees stop
-    # matching. r12's A/B against this pin (llm_ngram_jaccard 2.12 ->
-    # 2.37 s) predates the mapInPandas rewrite, when the table still ended
-    # in a distinct exchange that ReusedExchange shared. With the pin,
-    # isolated sf0.1 medians over two rounds (unpinned -> pinned):
-    # llm_subset_containment_capped 5.05/5.47 -> 4.43/4.46 s,
-    # llm_dedup_eval 7.69/8.09 -> 6.53/6.27 s.
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col).localCheckpoint()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
-    if candidates is not None:
-        shared = _pair_shared_counts(candidates, sh, id_col)
-    elif df_cap is not None:
-        # Shared capped funnel (bounded nomination fanout C(df_cap, 2) per
-        # shingle + lossless monotone upper-bound prefilter + exact hot
-        # verification of the survivors — the r7 re-plan that took this
-        # query 24.5 s -> 4.25 s at sf0.1). Jaccard's threshold test at
-        # the shared upper bound: smax / (na + nb - smax) >= t. The 5e-5
-        # slack covers the final filter's round-4 half-boundary (a true
-        # value of t - 0.00004 rounds UP to t and must survive the
-        # prefilter); slack only admits extra candidates, exact
-        # verification still decides.
-        shared = _capped_shared_counts(
-            sh,
-            sizes,
-            id_col,
-            df_cap,
-            lambda smax, na, nb: smax / (na + nb - smax) >= threshold - 5e-5,
-            require_lossless=require_lossless,
-        )
-    else:
-        shared = _all_shared_counts(sh, id_col)
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("nb"))
-    ratio = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    return _round_verdict(
-        shared.join(na, "id_a").join(nb, "id_b"), ratio, "jaccard", threshold
+    # The capped funnel's threshold test at the shared upper bound:
+    # smax / (na + nb - smax) >= t (the r7 re-plan that took this query
+    # 24.5 s -> 4.25 s at sf0.1). The 5e-5 slack covers the final
+    # filter's round-4 half-boundary (a true value of t - 0.00004 rounds
+    # UP to t and must survive the prefilter); slack only admits extra
+    # candidates, exact verification still decides.
+    floor = threshold - 5e-5
+    shared = _shared_counts(
+        df,
+        n,
+        id_col,
+        text_col,
+        candidates,
+        df_cap,
+        require_lossless,
+        lambda smax, na, nb: smax / (na + nb - smax) >= floor,
+        lambda na, nb: F.least(na, nb) >= floor * F.greatest(na, nb),
     )
+    ratio = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    return _round_verdict(shared, ratio, "jaccard", threshold)
 
 
 def _round_verdict(
@@ -518,32 +544,25 @@ def containment_pairs(
     shared <= s_cold + min(hot_a, hot_b) evaluated at containment's
     threshold test smax / min(na, nb) >= t (containment is monotone in
     shared, so the prefilter loses nothing); uncapped default is the exact
-    all-shared-shingle self-join for oracle verification only.
+    all-shared-shingle self-join for oracle verification only. Sizes
+    alone bound nothing here (a small document can sit wholly inside a
+    large one), so no branch has a length filter.
     """
-    # Pinned for the same reason as in ngram_jaccard_pairs.
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col).localCheckpoint()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
-    if candidates is not None:
-        shared = _pair_shared_counts(candidates, sh, id_col)
-    elif df_cap is not None:
-        # 5e-5 slack for the final round-4 filter boundary, as in
-        # ngram_jaccard_pairs.
-        shared = _capped_shared_counts(
-            sh,
-            sizes,
-            id_col,
-            df_cap,
-            lambda smax, na, nb: smax / F.least(na, nb) >= threshold - 5e-5,
-            require_lossless=require_lossless,
-        )
-    else:
-        shared = _all_shared_counts(sh, id_col)
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("nb"))
-    ratio = F.col("shared") / F.least(F.col("na"), F.col("nb"))
-    return _round_verdict(
-        shared.join(na, "id_a").join(nb, "id_b"), ratio, "containment", threshold
+    # 5e-5 slack for the final round-4 filter boundary, as in
+    # ngram_jaccard_pairs.
+    floor = threshold - 5e-5
+    shared = _shared_counts(
+        df,
+        n,
+        id_col,
+        text_col,
+        candidates,
+        df_cap,
+        require_lossless,
+        lambda smax, na, nb: smax / F.least(na, nb) >= floor,
     )
+    ratio = F.col("shared") / F.least(F.col("na"), F.col("nb"))
+    return _round_verdict(shared, ratio, "containment", threshold)
 
 
 def embedding_neardup_pairs(
@@ -571,6 +590,14 @@ def embedding_neardup_pairs(
         emb_d.alias("e"),
         F.sqrt(F.aggregate(emb_d, F.lit(0.0), lambda a, x: a + x * x)).alias("nrm"),
     )
+    if candidates is not None and _fits_broadcast(base):
+        # Hinted where Catalyst already estimates the embeddings under the
+        # broadcast threshold. Unhinted, AQE chose the first join's build
+        # side by which stage finished first (the candidate list's
+        # distinct, then broadcast; or the embeddings' broadcast for the
+        # second join, then reused), so executions alternated between two
+        # plans and a repeat execution could compile new classes.
+        base = F.broadcast(base)
     a, b = base.alias("a"), base.alias("b")
     dot = F.aggregate(
         F.zip_with(F.col("a.e"), F.col("b.e"), lambda x, y: x * y),
@@ -600,6 +627,14 @@ def embedding_neardup_pairs(
     if top is not None:
         pairs = pairs.orderBy(F.col("sim").desc(), "id_a", "id_b").limit(top)
     return pairs
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether Catalyst's size estimate of ``df`` (no job is run) is
+    within the session's broadcast threshold."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    limit = df.sparkSession._jsparkSession.sessionState().conf()
+    return 0 < size <= limit.autoBroadcastJoinThreshold()
 
 
 def collapse_text_groups(

@@ -399,7 +399,12 @@ def embedding_candidates_lsh(
     set equals the former ``approxSimilarityJoin`` output (same buckets,
     same strict ``dist < radius`` predicate, float64 both sides);
     measured 5.5 s -> 1.1 s on the sf0.1 funnel with an identical
-    4136-pair set.
+    4136-pair set. Both Python stages take Arrow data as is: the hash
+    stage is one ``mapInArrow`` that emits a row per (vector, table)
+    (no pandas UDF + ``posexplode``), and the Gram pass is
+    ``groupBy(...).applyInArrow``; each reshapes its flattened list
+    column to a (rows, dim) matrix in one step instead of stacking one
+    array per row, and refuses a null or ragged embedding.
 
     Recall is probabilistic (seeded, hence deterministic per run): a true
     pair is missed only if it collides in none of ``num_hash_tables``
@@ -415,17 +420,54 @@ def embedding_candidates_lsh(
     proj_t = _brp_unit_vectors(spark, dim, num_hash_tables, seed).T.copy()
     blen = float(bucket_length)
 
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     id_type = df.schema[id_col].dataType
+    emb_type = df.schema[emb_col].dataType
 
-    @pandas_udf(ArrayType(LongType()))
-    def _buckets(e: pd.Series) -> pd.Series:
-        if e.empty:
-            return pd.Series([], dtype=object)
-        m = np.vstack(e.to_numpy()).astype(np.float64)
-        h = np.floor(m @ proj_t / blen).astype(np.int64)
-        return pd.Series(list(h))
+    def _matrix(emb):
+        """(rows, dim) float64 view of an Arrow list column. Raises on a
+        null or ragged embedding, as ``np.vstack`` did: a flat buffer is
+        reshaped only when every row holds exactly ``dim`` non-null
+        values, never because its length happens to divide evenly."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if isinstance(emb, pa.ChunkedArray):
+            emb = emb.combine_chunks()
+        lens = pc.list_value_length(emb)
+        if emb.null_count or pc.any(pc.not_equal(lens, dim)).as_py():
+            raise ValueError(
+                f"embedding_candidates_lsh: every {emb_col!r} must hold "
+                f"{dim} values; got a null or ragged row"
+            )
+        flat = pc.list_flatten(emb)
+        if flat.null_count:
+            raise ValueError(
+                f"embedding_candidates_lsh: null element in {emb_col!r}"
+            )
+        return flat.to_numpy().astype(np.float64).reshape(len(emb), dim)
+
+    def _hash_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        tables = np.arange(num_hash_tables, dtype=np.int32)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            h = np.floor(_matrix(batch.column(1)) @ proj_t / blen).astype(np.int64)
+            rep = pa.array(np.repeat(np.arange(batch.num_rows), num_hash_tables))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(rep),
+                    batch.column(1).take(rep),
+                    pa.array(np.tile(tables, batch.num_rows)),
+                    pa.array(h.ravel()),
+                ],
+                names=["_id", "_e", "_t", "_b"],
+            )
 
     # Tile size for the per-bucket pairwise pass (r13, VERDICT #2): a
     # degenerate bucketLength on unit vectors can put ~the whole corpus in
@@ -438,13 +480,16 @@ def embedding_candidates_lsh(
     # d2 < r2 on the same float64 operands, same upper-triangle
     # enumeration).
 
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.vstack(pdf["_e"].to_numpy()).astype(np.float64)
-        ids = pdf["_id"].to_numpy()
+    def _bucket_pairs(tbl):
+        import numpy as np
+        import pyarrow as pa
+
+        m = _matrix(tbl.column("_e"))
+        ids = tbl.column("_id").to_numpy()
         sq = np.einsum("ij,ij->i", m, m)
         n = m.shape[0]
         bs = max(gram_block, 1)
-        out_a, out_b = [], []
+        out_a, out_b = [ids[:0]], [ids[:0]]
         for s in range(0, n, bs):
             mb, sqb = m[s : s + bs], sq[s : s + bs]
             for t in range(s, n, bs):
@@ -456,32 +501,37 @@ def embedding_candidates_lsh(
                 ii, jj = np.where(d2 < r2)
                 gi, gj = ii + s, jj + t
                 close = gj > gi  # upper triangle, == the old triu(k=1)
-                if not close.any():
-                    continue
                 out_a.append(ids[gi[close]])
                 out_b.append(ids[gj[close]])
-        if not out_a:
-            return pd.DataFrame(
-                {"id_a": ids[:0], "id_b": ids[:0]}
-            )
         id_a = np.concatenate(out_a)
         id_b = np.concatenate(out_b)
         lo = np.minimum(id_a, id_b)
         hi = np.maximum(id_a, id_b)
         keep = lo < hi  # mirror approxSimilarityJoin's strict id_a < id_b
-        return pd.DataFrame({"id_a": lo[keep], "id_b": hi[keep]})
+        id_arrow = tbl.schema.field("_id").type
+        return pa.table(
+            {
+                "id_a": pa.array(lo[keep], type=id_arrow),
+                "id_b": pa.array(hi[keep], type=id_arrow),
+            }
+        )
 
+    hashed_schema = StructType(
+        [
+            StructField("_id", id_type),
+            StructField("_e", emb_type),
+            StructField("_t", IntegerType()),
+            StructField("_b", LongType()),
+        ]
+    )
     out_schema = StructType(
         [StructField("id_a", id_type), StructField("id_b", id_type)]
     )
-    hashed = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(emb_col).alias("_e"),
-        F.posexplode(_buckets(F.col(emb_col))).alias("_t", "_b"),
-    )
     return (
-        hashed.groupBy("_t", "_b")
-        .applyInPandas(_bucket_pairs, out_schema)
+        df.select(F.col(id_col).alias("_id"), F.col(emb_col).alias("_e"))
+        .mapInArrow(_hash_batches, hashed_schema)
+        .groupBy("_t", "_b")
+        .applyInArrow(_bucket_pairs, out_schema)
         .distinct()
     )
 

@@ -103,7 +103,9 @@ HEADLINES = {
         "df-capped pair funnel: cold-shingle self-join counts shared "
         "directly (C(cap,2) fanout bound), the lossless s_cold+min(hot) "
         "upper bound pre-filters, and the exact hot-intersection join "
-        "runs on survivors only — no nominated-pair re-verification"
+        "runs on survivors only — no nominated-pair re-verification; "
+        "each shingle row carries its document's shingle count, so no "
+        "size aggregate or size join appears"
     ),
     "scan_zorder_curve": (
         "Morton interleave as 16 static shift/mask terms in one "

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyuki_spark.catalog import load_table
+from nyuki_spark.functions.text import word_ngrams
 from nyuki_spark.operators.dedup import (
     containment_pairs,
     exact_dedup_keep_first,
@@ -186,33 +187,133 @@ _BOUNDARY_DOCS = [
     (3, "p q r s t"),
     (4, "p q r s x y"),
 ]
+# The Jaccard length filter's boundary: doc 5's 4 shingles lie inside doc
+# 6's 8 (Jaccard = min/max = 0.5 exactly) and doc 7's 3 inside doc 8's 7
+# (Jaccard = min/max = 3/7); containment is 1.0 for both pairs.
+_LENGTH_DOCS = [
+    (5, "a1 a2 a3 a4 a5 a6"),
+    (6, "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"),
+    (7, "b1 b2 b3 b4 b5"),
+    (8, "b1 b2 b3 b4 b5 b6 b7 b8 b9"),
+]
 _RATIOS = {
-    ngram_jaccard_pairs: {(1, 2): (3, 7), (3, 4): (2, 5)},
-    containment_pairs: {(1, 2): (3, 5), (3, 4): (2, 3)},
+    ngram_jaccard_pairs: {(1, 2): (3, 7), (3, 4): (2, 5), (5, 6): (4, 8), (7, 8): (3, 7)},
+    containment_pairs: {(1, 2): (3, 5), (3, 4): (2, 3), (5, 6): (4, 4), (7, 8): (3, 3)},
 }
 
 
 @pytest.mark.parametrize(
-    "op, threshold, kept",
+    "docs, op, threshold, kept",
     [
         # 3/7 rounds HALF_UP to 0.4286 = t although it is below t.
-        (ngram_jaccard_pairs, 0.4286, [(1, 2)]),
+        pytest.param(
+            _BOUNDARY_DOCS, ngram_jaccard_pairs, 0.4286, [(1, 2)],
+            id="ngram_jaccard_pairs-0.4286-kept0",
+        ),
         # 3/7 is 8.6e-6 below t - 0.00005, inside the 1e-4 prefilter band:
         # the exact round decides, and drops it.
-        (ngram_jaccard_pairs, 0.42863, []),
+        pytest.param(
+            _BOUNDARY_DOCS, ngram_jaccard_pairs, 0.42863, [],
+            id="ngram_jaccard_pairs-0.42863-kept1",
+        ),
         # 2/3 rounds up to 0.6667 = t.
-        (containment_pairs, 0.6667, [(3, 4)]),
+        pytest.param(
+            _BOUNDARY_DOCS, containment_pairs, 0.6667, [(3, 4)],
+            id="containment_pairs-0.6667-kept2",
+        ),
         # 2/3 is 3.3e-6 below t - 0.00005.
-        (containment_pairs, 0.66672, []),
+        pytest.param(
+            _BOUNDARY_DOCS, containment_pairs, 0.66672, [],
+            id="containment_pairs-0.66672-kept3",
+        ),
+        # Size ratio 4/8 = J = t exactly: the length filter keeps it.
+        pytest.param(
+            _LENGTH_DOCS, ngram_jaccard_pairs, 0.5, [(5, 6)],
+            id="ngram_jaccard_pairs-length-ratio-equals-t",
+        ),
+        # Size ratio 3/7 is 2.1e-5 above t - 0.00005, and J = 3/7 rounds
+        # up to t: the length filter must keep it.
+        pytest.param(
+            _LENGTH_DOCS, ngram_jaccard_pairs, 0.4286, [(5, 6), (7, 8)],
+            id="ngram_jaccard_pairs-length-ratio-inside-slack",
+        ),
+        # Size ratio 3/7 is 8.6e-6 below t - 0.00005: dropped.
+        pytest.param(
+            _LENGTH_DOCS, ngram_jaccard_pairs, 0.42863, [(5, 6)],
+            id="ngram_jaccard_pairs-length-ratio-below-slack",
+        ),
+        # Size ratio 0.5 is 1e-5 below t - 0.00005: dropped.
+        pytest.param(
+            _LENGTH_DOCS, ngram_jaccard_pairs, 0.50006, [],
+            id="ngram_jaccard_pairs-length-ratio-just-below",
+        ),
+        # Containment has no length bound: size ratios of 0.5 and 3/7 far
+        # below t still give containment 1.0.
+        pytest.param(
+            _LENGTH_DOCS, containment_pairs, 0.8, [(5, 6), (7, 8)],
+            id="containment_pairs-no-length-filter",
+        ),
     ],
 )
-def test_pair_verdict_prefilter_keeps_the_round4_boundary(spark, op, threshold, kept):
-    docs = spark.createDataFrame(_BOUNDARY_DOCS, "doc_id long, text string")
-    got = sorted((r.id_a, r.id_b) for r in op(docs, threshold=threshold).collect())
+def test_pair_verdict_prefilter_keeps_the_round4_boundary(
+    spark, docs, op, threshold, kept
+):
+    ids = {doc_id for doc_id, _ in docs}
+    frame = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted((r.id_a, r.id_b) for r in op(frame, threshold=threshold).collect())
     expected = sorted(
         pair
         for pair, (num, den) in _RATIOS[op].items()
-        if (Decimal(num) / Decimal(den)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        if set(pair) <= ids
+        and (Decimal(num) / Decimal(den)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
         >= Decimal(str(threshold))
     )
     assert got == expected == kept
+
+
+# Rows for the word_ngrams reference check: doubled, leading and trailing
+# spaces (empty tokens), multibyte UTF-8, NULL text, fewer tokens than n,
+# an empty text, shingles repeated inside one document, and doc 7 on two
+# rows whose shingle sets overlap.
+_NGRAM_ROWS = [
+    (1, "the cat sat on the mat and the cat sat on the mat again"),
+    (2, "  leading  doubled   and trailing  "),
+    (3, "naïve café — 日本語 テキスト ✓ ✓ ✓ naïve café — 日本語"),
+    (4, None),
+    (5, "two words"),
+    (6, ""),
+    (7, "a b c d e f g"),
+    (7, "c d e f g h i"),
+    (8, "x x x x x x x x x"),
+    (9, "one"),
+]
+
+
+def _ngram_reference(rows, n, with_size):
+    """Distinct n-gram shingles per input row, written with str.split."""
+    out = []
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        toks = text.split(" ")
+        grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        out += [(doc_id, g, len(grams)) if with_size else (doc_id, g) for g in grams]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("with_size", [False, True], ids=["rows", "with_size"])
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_word_ngrams_matches_python_reference(spark, n, with_size):
+    # One partition: both doc-7 rows reach the same Arrow batch, where a
+    # per-id grouping would merge them.
+    df = spark.createDataFrame(_NGRAM_ROWS, "doc_id long, text string").coalesce(1)
+    out = word_ngrams(df, n=n, with_size=with_size)
+    expected_cols = ["doc_id", "shingle"] + (["ns"] if with_size else [])
+    assert out.columns == expected_cols
+    if with_size:
+        assert out.schema["ns"].dataType.simpleString() == "bigint"
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == _ngram_reference(_NGRAM_ROWS, n, with_size)
+    # Doc 7's two rows share shingles: each row keeps its own copy.
+    doc7 = [r for r in got if r[0] == 7]
+    assert len(doc7) > len({r[1] for r in doc7})

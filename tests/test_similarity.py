@@ -128,6 +128,29 @@ def test_lsh_giant_bucket_tiled_pairs_identical(spark, sf_dir):
     assert tiled and tiled <= brute
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [
+        # 2 rows of 64 with one null: the flat buffer holds 64 values,
+        # which would reshape evenly to (2, 32).
+        None,
+        [0.25] * 32,
+        [0.25] * 63 + [None],
+    ],
+    ids=["null_row", "ragged_row", "null_element"],
+)
+def test_lsh_rejects_null_or_ragged_embeddings(spark, bad):
+    """The Arrow stages reshape a flattened list column: a batch with a
+    null or ragged embedding must fail, as ``np.vstack`` did, never hash
+    a silently misshapen matrix."""
+    from nyuki_spark.operators.similarity import embedding_candidates_lsh
+
+    rows = [(1, [0.125] * 64), (2, bad)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    with pytest.raises(Exception, match="null or ragged row|null element"):
+        embedding_candidates_lsh(emb, sim_floor=0.35).collect()
+
+
 def test_ts_profile_lsh_recall_at_floor(spark, sf_dir):
     """ADVICE r3: assert LSH recall vs brute force for the 24-dim COUNT-
     profile shape ts_similar_users feeds through embedding_candidates_lsh
