@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nyuki_spark.operators.estimate import size_estimate
+
 __all__ = [
     "global_row_number",
     "global_running_sum",
@@ -73,11 +75,8 @@ def _auto_buckets(df: DataFrame, cap: int = 32) -> int:
     cap, which is the safe direction (over-bucketing costs a little
     latency, under-bucketing OOMs).
     """
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return cap
-    if size <= 0 or size >= cap * _BYTES_PER_BUCKET:
+    size = size_estimate(df)
+    if size is None or size >= cap * _BYTES_PER_BUCKET:
         return cap
     return max(1, -(-size // _BYTES_PER_BUCKET))
 

@@ -14,7 +14,11 @@ once pins it, and the only pin is ``DataFrame.localCheckpoint``:
   ``isEmpty``/``count`` probe, a per-step ``collect``) or removes the
   frame's inputs before it returns (a dropped table, a deleted scratch
   dir), and lazy (``localCheckpoint(eager=False)``) otherwise: the first
-  job that reads it fills it.
+  job that reads it fills it. One exception: a pin whose only read
+  inside the function is an ``isEmpty`` probe that decides whether the
+  frame is read again may be lazy, because the probe fills it and an
+  eager pin would cost a job of its own (``_capped_shared_counts``'
+  hot-key census).
 - A local checkpoint gives up lineage: its blocks live only in the
   executors' block managers, so a lost executor fails the job instead of
   recomputing the lost partitions.

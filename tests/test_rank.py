@@ -12,7 +12,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nyuki_spark.catalog import load_table
-from nyuki_spark.operators.rank import global_row_number, key_rank, ntile_from_rn
+from nyuki_spark.operators.dedup import _fits_broadcast
+from nyuki_spark.operators.estimate import size_estimate
+from nyuki_spark.operators.rank import (
+    _auto_buckets,
+    global_row_number,
+    key_rank,
+    ntile_from_rn,
+)
 
 
 def test_global_row_number_matches_window(spark, sf_dir):
@@ -23,6 +30,23 @@ def test_global_row_number_matches_window(spark, sf_dir):
     w = Window.partitionBy(F.lit(0)).orderBy(F.col("value").desc(), "event_id")
     want = events.select("event_id", F.row_number().over(w).cast("int").alias("rn"))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_unreadable_size_estimate_means_no_hint(spark, sf_dir):
+    """An estimate that cannot be read is None for every caller: the
+    bucket count falls back to its cap and the broadcast hint is not
+    given, instead of one caller raising."""
+    orders = load_table(spark, sf_dir, "orders")
+    assert size_estimate(orders) > 0
+    assert _auto_buckets(orders) == 1
+    assert _fits_broadcast(orders)
+
+    class Unreadable:
+        _jdf = None
+
+    assert size_estimate(Unreadable()) is None
+    assert _auto_buckets(Unreadable(), cap=7) == 7
+    assert not _fits_broadcast(Unreadable())
 
 
 def test_global_row_number_ascending(spark, sf_dir):
